@@ -1,175 +1,48 @@
 """Layer-B operator packs (SURVEY.md §2.2).
 
-Each module exposes ``QUERIES: dict[name -> (spark, sf_dir) -> DataFrame]``
-and ``ORACLES: dict[name -> DuckDB SQL]``; ``all_queries()`` /
-``all_oracles()`` merge them for the driver contract in
-``/root/repo/__spark_entry__.py``.
+Each module in ``MODULES`` exposes ``QUERIES: dict[name -> (spark,
+sf_dir) -> DataFrame]`` and ``ORACLES: dict[name -> DuckDB SQL]``;
+``all_queries()`` / ``all_oracles()`` merge them for the contract in
+``__spark_entry__.py``. Every registry query releases the previous
+query's scoped persists before it runs (see ``_cache.py``).
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The driver evaluates registry entries in order with a per-round budget
-# (rotation.DRIVER_WINDOW=50 of 235 per round), so registry order decides
-# which queries earn a CORRECTNESS row this round.  This tuple is the
-# output of ``rotation.compute_front`` over merged CORRECTNESS_r1-r13 —
-# never-sampled additions first (none this round: every registry entry
-# has at least one green row), then `_CHANGED_THIS_ROUND` (rewritten
-# semantics/plans re-verify immediately — this round the triangle-count
-# plan rewrite plus `session_window_agg`, whose r13 oracle boundary fix
-# rotated out before earning a fresh row), then ascending latest-green
-# round, alphabetical within a tier — and ``tests/test_rotation.py``
-# asserts literal == computation, so the round-7 failure mode (51 names
-# hand-counted into a 50-slot window, silently starving
-# `embed_quantize_int8`) can no longer happen.  This window retires ALL
-# 45 remaining r9-green rows plus the three alphabetically-first r10
-# names; after this round's driver pass no registry entry is older
-# than r10-green.
-# Queries whose OUTPUT SEMANTICS or plan were rewritten this round —
-# their last green driver row no longer certifies the current code, so
-# rotation fronts them right after never-sampled additions (round-9
-# self-review finding: the staleness-only ordering left the RFM
-# rewrite and the cents migration without a same-round driver check).
-# Reset this tuple to () when regenerating for a round with no
-# semantic rewrites.
-_CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # round-14: the triangle count's closing check was rewritten from
-    # the wedge join to the adjacency-intersect form (graph.py
-    # _count_triangles) — output values unchanged (oracle-parity
-    # suites green), but the executed physical plan is new, so its
-    # r10 green row no longer certifies the current plan.
-    "graph_triangle_count",
-    # round-13 build phase rewrote session_window_agg's DUCKDB ORACLE
-    # boundary (>= -> > at the exact-gap merge) and the query rotated
-    # out of the r13 window before earning a green row under the new
-    # oracle (r13 verdict "What's wrong #2") — front it until the
-    # driver re-certifies it.
-    "session_window_agg",
-)
+from eventstream_benchmark_spark.operators._cache import released_at_entry
 
-_FRONT_GENERATED_FROM_ROUND = 13
-_FRONT_OF_REGISTRY: tuple[str, ...] = (
-    "graph_triangle_count",  # REWRITTEN this round (last green r10)
-    "session_window_agg",  # REWRITTEN this round (last green r12)
-    "agg_distinct_approx",  # r9
-    "agg_hll_merge_daily",  # r9
-    "ann_lsh_query_topk",  # r9
-    "ann_recall_eval",  # r9
-    "corpus_bpe_pair_counts",  # r9
-    "corpus_ngram_topk",  # r9
-    "corpus_source_topp",  # r9
-    "corpus_temperature_resample",  # r9
-    "dedup_containment_ngram",  # r9
-    "dedup_embedding_cosine",  # r9
-    "dedup_ngram_jaccard",  # r9
-    "dedup_simhash",  # r9
-    "dedup_url_normalize",  # r9
-    "embed_pq_encode",  # r9
-    "events_cusum_shift",  # r9
-    "events_downsample_lttb",  # r9
-    "generate_stream_dataframe_jittered",  # r9
-    "orders_rfm_segmentation",  # r9
-    "rollup_hourly_daily",  # r9
-    "sample_dsir_weights",  # r9
-    "scalar_json",  # r9
-    "scan_csv_roundtrip",  # r9
-    "scan_jsonl_roundtrip",  # r9
-    "scan_orc_roundtrip",  # r9
-    "scan_xml_roundtrip",  # r9
-    "sql_tpch_q17",  # r9
-    "sql_tpch_q2",  # r9
-    "sql_tpch_q20",  # r9
-    "sql_tpch_q21",  # r9
-    "sql_tpch_q22",  # r9
-    "sql_tpch_q8",  # r9
-    "stream_sessionize",  # r9
-    "stream_tumbling_rate",  # r9
-    "stream_type_drift",  # r9
-    "streaming_foreach_batch_sink",  # r9
-    "streaming_replay_tumbling",  # r9
-    "streaming_static_enrich",  # r9
-    "text_tfidf_topterms",  # r9
-    "topk_per_group",  # r9
-    "udtf_surface",  # r9
-    "win_frame_range",  # r9
-    "win_frame_running",  # r9
-    "win_lag_inter_arrival",  # r9
-    "win_value_functions",  # r9
-    "write_partitioned_pruned",  # r9
-    "agg_approx_topk_contract",  # r10
-    "agg_groupby_q1",  # r10
-    "agg_grouping_sets",  # r10
+MODULES: tuple[str, ...] = (
+    "eventstream_benchmark_spark.operators.relational",
+    "eventstream_benchmark_spark.operators.eventstream",
+    "eventstream_benchmark_spark.operators.funnel",
+    "eventstream_benchmark_spark.operators.graph",
+    "eventstream_benchmark_spark.operators.dedup",
+    "eventstream_benchmark_spark.operators.similarity",
+    "eventstream_benchmark_spark.operators.text",
+    "eventstream_benchmark_spark.operators.multimodal",
+    "eventstream_benchmark_spark.operators.pipeline",
+    "eventstream_benchmark_spark.generator.queries",
+    "eventstream_benchmark_spark.streaming.queries",
 )
 
 
-def _ordered(merged: dict) -> dict:
-    # single source of truth for the window size (round-8 advice):
-    # rotation.DRIVER_WINDOW is the measured driver budget; hardcoding
-    # 50 here too would let the two constants drift if it is ever
-    # re-measured
-    from eventstream_benchmark_spark.rotation import DRIVER_WINDOW
-
-    assert len(_FRONT_OF_REGISTRY) <= DRIVER_WINDOW, (
-        f"{len(_FRONT_OF_REGISTRY)} front names for the driver's "
-        f"{DRIVER_WINDOW}-slot per-round window — entries past the last "
-        "slot silently miss the round (the round-7 embed_quantize_int8 "
-        "overflow)"
-    )
-    missing = [n for n in _FRONT_OF_REGISTRY if n not in merged]
-    assert not missing, (
-        f"_FRONT_OF_REGISTRY names absent from the registry: {missing} — "
-        "a rename/removal would silently demote the query past the "
-        "driver's per-round window"
-    )
-    front = {n: merged.pop(n) for n in _FRONT_OF_REGISTRY}
-    front.update(merged)
-    return front
+def _modules() -> list[ModuleType]:
+    return [importlib.import_module(m) for m in MODULES]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from eventstream_benchmark_spark.operators import (
-        dedup,
-        eventstream,
-        funnel,
-        graph,
-        multimodal,
-        pipeline,
-        relational,
-        similarity,
-        text,
-    )
-    from eventstream_benchmark_spark.generator import queries as gen_queries
-    from eventstream_benchmark_spark.streaming import queries as streaming_queries
-
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in (relational, eventstream, funnel, graph, dedup, similarity, text, multimodal, pipeline):
-        merged.update(mod.QUERIES)
-    merged.update(gen_queries.QUERIES)
-    merged.update(streaming_queries.QUERIES)
-    return _ordered(merged)
+    return {
+        name: released_at_entry(query)
+        for mod in _modules()
+        for name, query in mod.QUERIES.items()
+    }
 
 
 def all_oracles() -> dict[str, str]:
-    from eventstream_benchmark_spark.operators import (
-        dedup,
-        eventstream,
-        funnel,
-        graph,
-        multimodal,
-        pipeline,
-        relational,
-        similarity,
-        text,
-    )
-    from eventstream_benchmark_spark.generator import queries as gen_queries
-    from eventstream_benchmark_spark.streaming import queries as streaming_queries
-
-    merged: dict[str, str] = {}
-    for mod in (relational, eventstream, funnel, graph, dedup, similarity, text, multimodal, pipeline):
-        merged.update(mod.ORACLES)
-    merged.update(gen_queries.ORACLES)
-    merged.update(streaming_queries.ORACLES)
-    return merged
+    return {name: sql for mod in _modules() for name, sql in mod.ORACLES.items()}

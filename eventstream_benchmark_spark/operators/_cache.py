@@ -1,26 +1,28 @@
-"""Query-scoped persist registry.
+"""Query-scoped and family-shared persist registries.
 
 Some operator functions persist intermediates where the barrier is
 load-bearing, not a nicety (see the Catalyst higher-order-function
 inlining note in ``dedup._doc_shingles``). But the functions return
 lazy DataFrames, so the query itself can never unpersist — and across
-an 85-query driver sweep inside one session, never-released persists
-accumulate executor storage.
+a sweep inside one session, never-released persists accumulate
+executor storage.
 
-Contract: persist through :func:`scoped_persist`, and call
-:func:`release_scoped_persists` at the ENTRY of every query function
-that persists. During a sweep at most one query's intermediates occupy
-storage at a time; harnesses (bench.py, tests) call the release once
-more at the end so nothing outlives the sweep. ``unpersist`` never
-invalidates a DataFrame — later actions just recompute — so releasing
-a previous query's cache is always safe.
+Contract: persist through :func:`scoped_persist`; query bodies never
+release. ``operators.all_queries`` wraps every query in
+:func:`released_at_entry`, which calls :func:`release_scoped_persists`
+before the query runs, so during a sweep at most one query's
+intermediates occupy storage at a time; a harness (perfbench, tests)
+releases once more at its end so nothing outlives the sweep.
+``unpersist`` never invalidates a DataFrame — later actions just
+recompute — so releasing a previous query's cache is always safe.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LIVE: list[DataFrame] = []
 
@@ -46,6 +48,20 @@ def release_scoped_persists() -> None:
         _LIVE.pop().unpersist()
 
 
+def released_at_entry(
+    query: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Wrap a registry query so it releases the previous query's scoped
+    persists before it runs."""
+
+    @functools.wraps(query)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_scoped_persists()
+        return query(spark, sf_dir)
+
+    return run
+
+
 def shared_persist(key: tuple, builder: Callable[[], DataFrame]) -> DataFrame:
     """Return the family-shared persisted DataFrame for ``key``,
     building it on first use. The key must include the Spark
@@ -56,13 +72,7 @@ def shared_persist(key: tuple, builder: Callable[[], DataFrame]) -> DataFrame:
     ``spark.catalog.clearCache()``), re-persist it — the frame stays
     valid either way (Spark recomputes lazily); re-persisting just
     restores the amortization."""
-    df = _SHARED.get(key)
-    if df is None:
-        df = builder()
-        _SHARED[key] = df
-    if not df.is_cached:
-        df.persist()
-    return df
+    return shared_persist_atomic((key,), lambda: (builder(),))[0]
 
 
 def shared_persist_atomic(
@@ -75,9 +85,9 @@ def shared_persist_atomic(
     ``release_shared_families`` naming only one of the family tags)
     can therefore never leave one twin riding a stale upstream persist
     while a rebuild of the other materializes a duplicate of that same
-    upstream (the r10 advisor's ``_collapse_family`` finding: the twin
-    frames share a persisted ``groups`` aggregate, and a half-evicted
-    group kept two copies of it in storage)."""
+    upstream (``dedup._collapse_family``'s twin frames share a
+    persisted ``groups`` aggregate, and a half-evicted group would keep
+    two copies of it in storage)."""
     if not all(k in _SHARED for k in keys):
         for k in keys:
             df = _SHARED.pop(k, None)

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from eventstream_benchmark_spark.io import load_table
 from eventstream_benchmark_spark.operators._cache import (
-    release_scoped_persists,
     scoped_persist,
     shared_persist,
     shared_persist_atomic,
@@ -274,8 +273,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quadratic in docs-per-shingle" shape is capped-constant per key;
     the LSH variant below is still the preferred scale path (its
     bucket joins touch candidates only, not every co-shingled pair)."""
-    release_scoped_persists()
-    return _jaccard_pairs(spark, sf_dir)
+    stats = _pair_intersections(_capped_shingles(_doc_shingles(spark, sf_dir)))
+    jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
+    return (
+        stats.withColumn("jaccard", r6(jac))
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("d1", "d2", "jaccard")
+    )
 
 
 def _pair_intersections(sh: DataFrame) -> DataFrame:
@@ -299,20 +303,6 @@ def _pair_intersections(sh: DataFrame) -> DataFrame:
     return inter.join(s1, "d1").join(s2, "d2")
 
 
-def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact J ≥ 0.8 pair set — the NON-RELEASING inner builder,
-    so composed queries (``dedup_recall_eval``) can call it after
-    other builders have registered scoped persists without dropping
-    them mid-composition."""
-    stats = _pair_intersections(_capped_shingles(_doc_shingles(spark, sf_dir)))
-    jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
-    return (
-        stats.withColumn("jaccard", r6(jac))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("d1", "d2", "jaccard")
-    )
-
-
 # --------------------------------------------------------------------------
 # shingle containment (partial-duplicate pairs)
 # --------------------------------------------------------------------------
@@ -330,7 +320,6 @@ def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle equi-join shape as ``dedup_ngram_jaccard`` (stop-shingle
     cap bounds the per-key fanout; one shuffle on shingle, one on the
     pair key), so the plan scales identically."""
-    release_scoped_persists()
     stats = _pair_intersections(_capped_shingles(_doc_shingles(spark, sf_dir)))
     containment = F.col("inter") / F.least("n1", "n2")
     return (
@@ -447,13 +436,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     member pairs. Output equals the all-pairs oracle (recall loss
     ≈ 5e-8 at J ≥ 0.8; the collapse is output-equal by construction —
     see :func:`_minhash_pairs_collapsed`).
-    """
-    release_scoped_persists()
-    return _lsh_pairs_shared(spark, sf_dir)
 
-
-def _lsh_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified near-dup pair set (d1, d2, jaccard), materialized
+    The verified near-dup pair set (d1, d2, jaccard) is materialized
     ONCE per (session, fixture) through the family-shared persist —
     the same amortization the basket-graph family applies to its
     co-purchase edge build (``graph._edge_base``). Three registered
@@ -714,7 +698,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EVAL split against the train corpus with the identical shape,
     and sharing the builder makes probe-parameter drift between the
     two structurally impossible (the `_band_sig_explode` rule)."""
-    release_scoped_persists()
     docs = load_table(spark, sf_dir, "documents")
     pairs = _asymmetric_member_pairs(
         docs,
@@ -839,16 +822,10 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: the exact side is the capped oracle shape (stop-shingle
     docfreq bound); at 100 TB one runs this eval on a sampled stratum,
     not the full corpus — the query composes unchanged."""
-    # ONE entry release, then non-releasing inner builders: calling
-    # the registered queries here would let the second entry's release
-    # drop the first builder's still-lazy scoped persists (the
-    # signature/shingle barriers), re-running the capped-shingle and
-    # signature aggregates once per plan reference at action time
-    release_scoped_persists()
-    lsh = _lsh_pairs_shared(spark, sf_dir).select(
+    lsh = dedup_minhash_lsh(spark, sf_dir).select(
         "d1", "d2", F.lit(1).alias("in_lsh")
     )
-    exact = _jaccard_pairs(spark, sf_dir).select(
+    exact = dedup_ngram_jaccard(spark, sf_dir).select(
         "d1", "d2", F.lit(1).alias("in_exact")
     )
     conf = lsh.join(exact, ["d1", "d2"], "full_outer")
@@ -948,7 +925,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket bits are replayed because only they determine the
     output.  Extending to the full 64-bit signature is the same
     expression over hex chars 1-16."""
-    release_scoped_persists()
     sh = _doc_shingles(spark, sf_dir)
     md5c = F.md5(F.col("s"))
     h16 = F.conv(F.substring(md5c, 13, 4), 16, 10).cast("long")
@@ -984,7 +960,6 @@ def dedup_simhash_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 variant; signature values are Spark-hash-specific, so this
     path is verified by tests (bucket-structure + vote arithmetic
     equivalence) instead of the DuckDB oracle."""
-    release_scoped_persists()
     sh = _doc_shingles(spark, sf_dir)
     hashes = F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
     docs = sh.select("doc_id", _simhash_udf()(hashes).alias("simhash"))
@@ -1110,7 +1085,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The verified pair set is family-shared (built once per session +
     fixture): ``dedup_semantic_recall_eval`` consumes the identical
     frame as its flat all-pairs truth side."""
-    release_scoped_persists()
     return shared_persist(
         (
             "emb_cosine_pairs",
@@ -1328,7 +1302,6 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exactly equivalent — see :func:`_cc_labels_shared`), so duplicate
     floods no longer multiply per-round edge volume. Oracle: DuckDB
     recursive-CTE transitive closure over the member-level pairs."""
-    release_scoped_persists()
     return _cluster_sizes(_cc_labels_shared(spark, sf_dir)).orderBy("doc_id")
 
 
@@ -1378,8 +1351,6 @@ def dedup_keeper_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every ordering ends at the unique doc_id). Oracle: the
     recursive-CTE transitive closure replayed with the identical three
     window orderings."""
-    release_scoped_persists()
-
     labels = _cc_labels_shared(spark, sf_dir)
     members = labels.join(
         load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"),
@@ -1456,7 +1427,6 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the documents scan, so the whole query is two keyed joins +
     one aggregate around the shared artifact. Output: (doc_id,
     cluster_size, w_micro), one row per document."""
-    release_scoped_persists()
     sizes = _cluster_sizes(_cc_labels_shared(spark, sf_dir)).select(
         "doc_id", "cluster_size"
     )

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 
 from eventstream_benchmark_spark.io import load_table
 from eventstream_benchmark_spark.operators._cache import (
-    release_scoped_persists,
     scoped_persist,
     shared_persist,
 )
@@ -254,7 +253,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     work bound that survives adversarial degree skew at 100 TB, with
     no wedge row ever materialized. Output (and hence the DuckDB
     oracle) is orientation-invariant."""
-    release_scoped_persists()
     # persist the thresholded edge set once (degree aggregate + two
     # annotation joins + vertex/edge stats all read it) and the
     # oriented set once (adjacency build + the base-edge stream); the
@@ -313,7 +311,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding guard, and the top-k orders by (rounded score, node id)
     so both engines cut the same 20 rows. No dangling nodes exist by
     construction (every vertex comes from an edge)."""
-    release_scoped_persists()
     # undirected edges landed ONCE hash-partitioned on src (the
     # family-SHARED frame, also consumed by BFS): the degree
     # aggregate, the annotation join, and all three rank joins consume
@@ -378,7 +375,6 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelling: a BIGINT·BIGINT product of 100 TB-scale counts wraps
     past 2⁶³ while doubles hold every count exactly and never
     overflow. Confidence is emitted the same way."""
-    release_scoped_persists()
     li = load_table(spark, sf_dir, "lineitem")
     d = li.select("l_orderkey", "l_partkey").distinct()
     n_orders = F.broadcast(
@@ -455,7 +451,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the per-hop profile (count + id-sum fingerprint), exact
     integers; the DuckDB oracle replays it as a recursive CTE whose
     UNION-dedupe bounds the walk at |V|·hops rows despite cycles."""
-    release_scoped_persists()
     # the family-SHARED undirected src-partitioned edge list: every
     # hop's frontier join keys on src, so each round is exchange-free
     # on the edge side (the same reuse pagerank's iterations get)
@@ -511,7 +506,6 @@ def graph_edge_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost>0) instead of silently vanishing from the profile, while the
     phantom year AFTER the data's last year — where the shifted frame
     alone has rows — is excluded because it is not an order year."""
-    release_scoped_persists()
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     d = (

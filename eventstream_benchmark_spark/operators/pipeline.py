@@ -172,16 +172,12 @@ def pipeline_dedup_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     One lazy plan: the three stage counts are 1-row aggregates unioned
     together — no driver-side .count() loop (the round-2 funnel
     lesson)."""
-    from eventstream_benchmark_spark.operators._cache import release_scoped_persists
     from eventstream_benchmark_spark.operators.dedup import (
         _capped_shingles,
         _minhash_pairs,
         _shingle_table,
     )
 
-    # entering a persisting query releases its predecessor's persists
-    # (the _cache.py sweep contract; dedup_minhash_lsh does the same)
-    release_scoped_persists()
     docs = load_table(spark, sf_dir, "documents")
     key = F.md5(F.lower("text"))
     keepers = (

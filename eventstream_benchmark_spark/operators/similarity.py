@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from eventstream_benchmark_spark.io import load_table
 from eventstream_benchmark_spark.operators._cache import (
-    release_scoped_persists,
     scoped_persist,
     shared_persist,
 )
@@ -452,7 +451,6 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is touched by two scans (assign, search) and shuffles only
     on (cluster) keys — the canonical IVF cost shape.
     """
-    release_scoped_persists()
     emb = _ivf_emb(spark, sf_dir)
     # the centroid model + inverted file are family-shared (see
     # _ivf_refined/_ivf_assigned): built once per (session, fixture)
@@ -559,7 +557,6 @@ def embed_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB replays the sign rule as a per-dimension
     sign-disagreement count (== bit_count(xor) by definition), the
     same r6 cosine, and both rankings."""
-    release_scoped_persists()
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -655,7 +652,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Quantize, dequantize, and the error fold are then per-row array
     exprs — single scan, no shuffle. The fold runs in array order in
     both engines, so the MSE is bit-identical cross-engine."""
-    release_scoped_persists()
     emb = load_table(spark, sf_dir, "embeddings")
     based = scoped_persist(
         emb.select(
@@ -948,7 +944,6 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles key on (cluster) and the per-cluster window reuses the
     pair join's partitioning. The oracle replays every stage with
     identical 6/9-decimal rounding and tie-breaks."""
-    release_scoped_persists()
     assigned, pairs = _semdedup_pairs(spark, sf_dir)
     per_cluster = pairs.groupBy("cluster").agg(
         F.count("*").alias("n_dup_pairs"),
@@ -998,8 +993,6 @@ def dedup_semantic_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth) and recomputes the identical confusion counts."""
     from eventstream_benchmark_spark.operators.dedup import dedup_embedding_cosine
 
-    # flat truth first: dedup_embedding_cosine releases scoped persists
-    # at ITS entry, so it must precede _semdedup_pairs' registrations
     flat = dedup_embedding_cosine(spark, sf_dir)
     truth = (
         flat.select(F.col("v2").alias("vec_id"))

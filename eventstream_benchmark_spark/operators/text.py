@@ -256,11 +256,6 @@ def text_langid_hash_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back (≤ 320 rows); scoring is a broadcast join + one
     keyed groupBy; the per-doc argmax is a partial-aggregable
     min-struct, so no window touches corpus-scale data."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-    )
-
-    release_scoped_persists()
     return _langid_hash_ngram(spark, load_table(spark, sf_dir, "documents"))
 
 
@@ -397,12 +392,8 @@ def text_langid_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid discipline; a test-half language absent from the train
     half simply has no centroid and can never be predicted — both
     engines agree structurally."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-        scoped_persist,
-    )
+    from eventstream_benchmark_spark.operators._cache import scoped_persist
 
-    release_scoped_persists()
     docs = load_table(spark, sf_dir, "documents")
     pdb = scoped_persist(_langid_bucket_counts(docs))
     train = pdb.filter(F.col("doc_id") % 2 == 0)
@@ -845,12 +836,8 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc-level ≈ 250 grams · 2e-8 ≈ 5e-6 — zero FP rows expected and
     observed at every fixture scale); production sizes M with the
     eval-gram count, same plan."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-        scoped_persist,
-    )
+    from eventstream_benchmark_spark.operators._cache import scoped_persist
 
-    release_scoped_persists()
     # three consumers below (filter build, position probe, exact
     # contract join) — one scan + tokenize instead of three
     grams = scoped_persist(_decon_grams(load_table(spark, sf_dir, "documents")))
@@ -962,14 +949,10 @@ def decontaminate_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the worst overlap. Oracle: the capped-shingle all-pairs
     Jaccard with the split join condition replacing the d1<d2
     self-join, aggregated per train doc."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-    )
     from eventstream_benchmark_spark.operators.dedup import (
         _asymmetric_member_pairs,
     )
 
-    release_scoped_persists()
     bucket = _split_bucket()
     pairs = _asymmetric_member_pairs(
         load_table(spark, sf_dir, "documents"),
@@ -1022,17 +1005,13 @@ def decontaminate_semantic_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical pairs; candidate recall over the fixtures is exhaustive
     — any banding miss fails the driver's value hash loudly, the same
     contract ``dedup_embedding_cosine`` carries)."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-        scoped_persist,
-    )
+    from eventstream_benchmark_spark.operators._cache import scoped_persist
     from eventstream_benchmark_spark.operators.dedup import (
         COSINE_DUP_THRESHOLD,
         _emb_band_sigs_udf,
         _seq_dot_udf,
     )
 
-    release_scoped_persists()
     seq_dot = _seq_dot_udf()
     band_sigs = _emb_band_sigs_udf()
     raw = load_table(spark, sf_dir, "embeddings").select(
@@ -1637,11 +1616,6 @@ def corpus_bpe_merge_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (freq DESC, a ASC, b ASC) in both engines; the loop stops early
     if the vocabulary runs out of adjacent pairs, which is also when
     the oracle's winner CTEs go empty."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-    )
-
-    release_scoped_persists()
     return _bpe_family(spark, sf_dir)[0].orderBy("step")
 
 
@@ -1853,11 +1827,6 @@ def corpus_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputing them here (seconds — the loop is vocabulary-bound) is
     fixture pragmatism, same note as ``dedup_minhash_incremental``'s
     corpus-side index."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-    )
-
-    release_scoped_persists()
     docs = load_table(spark, sf_dir, "documents")
     _, history = _bpe_family(spark, sf_dir)
     tokmap = history[-1].select("w", F.size(_bpe_toks()).alias("n_tok"))
@@ -1905,11 +1874,6 @@ def corpus_bpe_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 9-row result. If training exhausts the vocabulary early, the
     curve pads with the final state — flat tail, exactly matching the
     oracle's unchanged v_k CTEs."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-    )
-
-    release_scoped_persists()
     return _vocab_curve_from_history(_bpe_family(spark, sf_dir)[1])
 
 
@@ -2233,12 +2197,8 @@ def text_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over a doc_id-partitioned window — partition size = one
     document, bounded). No all-pairs form, no per-doc-pair work: cost
     is linear in corpus tokens around keyed shuffles."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-        scoped_persist,
-    )
+    from eventstream_benchmark_spark.operators._cache import scoped_persist
 
-    release_scoped_persists()
     docs = load_table(spark, sf_dir, "documents")
     # persisted: the duplicate-mark aggregate AND the semi-join probe
     # side both consume the span table, and the 8-gram concat chain is
@@ -2315,12 +2275,8 @@ def text_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     three consumers below (span build, per-token explode, n_tokens) —
     so the corpus is scanned and split ONCE (round-10 review; the same
     one-scan rule ``decontaminate_bloom`` documents)."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-        scoped_persist,
-    )
+    from eventstream_benchmark_spark.operators._cache import scoped_persist
 
-    release_scoped_persists()
     base = scoped_persist(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", _tokens(F.col("text")).alias("w")
@@ -4027,11 +3983,6 @@ def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds; the 'middle' default on null thresholds is kept as an
     explicit agreed fallback in the query, the oracle, and the test
     reference."""
-    from eventstream_benchmark_spark.operators._cache import (
-        release_scoped_persists,
-    )
-
-    release_scoped_persists()
     return _perplexity_bucket(spark, load_table(spark, sf_dir, "documents"))
 
 

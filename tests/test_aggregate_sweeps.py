@@ -29,10 +29,13 @@ from __future__ import annotations
 
 import random
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from tests.conftest import SF_ORACLE, SF_SMALL
 from tests.sweep_util import quarter as _quarter, sweep_check
 
 Q1_CUT_US = 904_694_400_000_000  # 1998-09-02 00:00:00 UTC
@@ -218,3 +221,95 @@ def test_aggregate_family_randomized_oracle_agreement(spark, tmp_path, seed):
     rng = random.Random(seed)
     sf = _build_fixture(rng, tmp_path / f"agg{seed}")
     sweep_check(spark, sf, SWEPT, ("nation", "customer", "orders", "lineitem", "events"), seed)
+
+
+def test_kmv_bottom_k_merge_theorem(spark):
+    """Bottom-k of a union equals bottom-k of per-shard bottom-ks — on
+    synthetic hash values crafted so every day's sketch OVERLAPS the
+    global bottom region (the stress case for the merge path)."""
+    from eventstream_benchmark_spark.operators.relational import KMV_K
+
+    rows = [(d, v * 7919 % 100_003) for d in range(5) for v in range(400)]
+    df = spark.createDataFrame(rows, "day int, h long").distinct()
+    direct = [
+        r.h
+        for r in df.select("h")
+        .distinct()
+        .orderBy("h")
+        .limit(KMV_K)
+        .collect()
+    ]
+    from pyspark.sql import Window as W
+
+    w_day = W.partitionBy("day").orderBy("h")
+    merged = (
+        df.withColumn("rn", F.row_number().over(w_day))
+        .filter(F.col("rn") <= KMV_K)
+        .select("h")
+        .distinct()
+        .orderBy("h")
+        .limit(KMV_K)
+        .collect()
+    )
+    assert [r.h for r in merged] == direct
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_ORACLE])
+def test_topk_tie_gap_invariant(sf_dir):
+    """``agg_approx_topk_contract``'s oracle hardcodes TRUE for
+    in_sketch. That is only guaranteed when the 5th exact count
+    strictly exceeds the (TOPK_SKETCH+1)-th: then at most TOPK_SKETCH
+    items have count ≥ the 5th's, so ANY width-10 exact top-k
+    selection must include the top 5 regardless of engine-internal
+    tie order (pigeonhole). Pin that gap as a fixture invariant at
+    both test SFs."""
+    from eventstream_benchmark_spark.operators.relational import (
+        TOPK_EXACT,
+        TOPK_SKETCH,
+    )
+
+    con = duckdb.connect()
+    try:
+        counts = [
+            r[0]
+            for r in con.execute(
+                f"""
+                SELECT count(*) AS n
+                FROM read_parquet('{sf_dir}/lineitem.parquet')
+                GROUP BY l_partkey ORDER BY n DESC
+                LIMIT {TOPK_SKETCH + 1}
+                """
+            ).fetchall()
+        ]
+    finally:
+        con.close()
+    assert len(counts) == TOPK_SKETCH + 1, "fixture narrower than the sketch"
+    # strict gap: the 5th-ranked count beats the 11th-ranked, so at most
+    # 10 items tie at-or-above it and the sketch MUST contain the top 5
+    assert counts[TOPK_EXACT - 1] > counts[TOPK_SKETCH], (
+        f"tie plateau spans the sketch boundary at {sf_dir}: "
+        f"5th={counts[TOPK_EXACT - 1]} 11th={counts[TOPK_SKETCH]} — "
+        "in_sketch=TRUE is no longer pigeonhole-guaranteed"
+    )
+
+
+def test_weighted_reservoir_monotone_in_weight(spark, sf_oracle):
+    """Selection frequency must respond to weight: the sampled docs'
+    mean weight should be >= the corpus mean weight (heavier docs hold
+    more tickets). Deterministic given the fixture."""
+    from eventstream_benchmark_spark.operators.text import (
+        RESERVOIR_MAX_W,
+        RESERVOIR_W_DIV,
+        sample_weighted_reservoir,
+    )
+    from eventstream_benchmark_spark.io import load_table
+
+    sample = sample_weighted_reservoir(spark, sf_oracle)
+    mean_sample_w = sample.agg(F.avg("weight")).first()[0]
+    docs = load_table(spark, sf_oracle, "documents")
+    w = F.least(
+        F.lit(RESERVOIR_MAX_W),
+        F.lit(1) + (F.col("n_chars") / F.lit(RESERVOIR_W_DIV)).cast("long"),
+    )
+    mean_corpus_w = docs.select(w.alias("w")).agg(F.avg("w")).first()[0]
+    assert mean_sample_w >= mean_corpus_w

@@ -87,3 +87,24 @@ def test_cluster_family_randomized_oracle_agreement(spark, tmp_path, seed):
         str(root / "documents.parquet"),
     )
     sweep_check(spark, str(root), SWEPT, ("documents",), seed)
+
+
+def test_min_label_cc_deep_chain_converges(spark):
+    """A 200-node path is the adversarial shape for fixed-round label
+    propagation: a 5-round unrolling covers diameters only to ~62
+    (d_r = 2·d_{r-1}+2 per min-hop + pointer-doubling round), so the
+    far end of the chain would keep non-minimal labels. The
+    loop-to-fixpoint spelling must label every node with the chain's
+    minimum id — and multi-component graphs must keep components
+    separate."""
+    from eventstream_benchmark_spark.operators.dedup import _min_label_cc
+
+    n = 200
+    chain = [(i, i + 1) for i in range(n - 1)]
+    # a second, disjoint component with a non-zero minimum
+    island = [(1000, 1001), (1001, 1002)]
+    pairs = spark.createDataFrame(chain + island, "d1 long, d2 long")
+    labels = {r.doc_id: r.label for r in _min_label_cc(pairs).collect()}
+    assert len(labels) == n + 3
+    assert all(labels[i] == 0 for i in range(n))
+    assert all(labels[i] == 1000 for i in (1000, 1001, 1002))

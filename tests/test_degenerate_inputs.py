@@ -33,6 +33,7 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from tests.oracle_harness import check_query
 
@@ -203,3 +204,54 @@ def test_degenerate_whole_registry(spark, degen_dir, name):
     issues = check_query(spark, degen_dir, name, e.queries()[name],
                          e.oracle_sql()[name])
     assert not issues, f"{name}: " + "; ".join(issues)
+
+
+def test_zero_denominator_degrades_to_null_not_crash(spark):
+    """ANSI alignment pins: this environment's Spark 4 default
+    (ansi.enabled=true) raises DIVIDE_BY_ZERO on every division form
+    while DuckDB yields NULL — so the shared guards must turn the
+    degenerate-but-plausible zero denominators (zero-norm embedding
+    vectors, constant series, one-sample groups) into NULL, matching
+    the oracle, instead of crashing the job at scale."""
+    import duckdb
+
+    from eventstream_benchmark_spark.operators._util import (
+        floor_micro,
+        null_safe_div,
+    )
+    from eventstream_benchmark_spark.operators.similarity import _cos, _dot, _norm
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+    # a zero vector alongside a real one: the pair cosine must be NULL
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [1.0, 2.0, 2.0])], "vec_id long, v array<double>"
+    )
+    a, b = df.alias("a"), df.alias("b")
+    rows = (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            _cos(
+                _dot(F.col("a.v"), F.col("b.v")),
+                _norm(F.col("a.v")),
+                _norm(F.col("b.v")),
+            ).alias("c")
+        )
+        .collect()
+    )
+    assert len(rows) == 1 and rows[0]["c"] is None
+
+    # floor_micro: zero denominator -> NULL (DuckDB twin agrees)
+    fm = spark.range(1).select(floor_micro(F.lit(5), F.lit(0)).alias("m")).collect()
+    assert fm[0]["m"] is None
+    duck = duckdb.connect().execute(
+        "SELECT CAST(floor(1000000.0 * (CAST(5 AS DOUBLE) / CAST(0 AS DOUBLE)))"
+        " AS BIGINT)"
+    ).fetchone()[0]
+    assert duck is None
+
+    # null_safe_div leaves nonzero denominators bit-identical
+    val = spark.range(1).select(
+        (null_safe_div(F.lit(1.0), F.lit(3.0)) == F.lit(1.0) / F.lit(3.0)).alias("eq")
+    ).collect()
+    assert val[0]["eq"] is True

@@ -19,11 +19,13 @@ counting.
 
 from __future__ import annotations
 
+import os
 import random
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from tests.sweep_util import quarter as _quarter, sweep_check
 
@@ -105,3 +107,39 @@ def test_graph_randomized_oracle_agreement(spark, tmp_path, seed):
     rng = random.Random(seed)
     sf = _build_fixture(rng, tmp_path / f"graph{seed}")
     sweep_check(spark, sf, SWEPT, ("orders", "lineitem"), seed)
+
+
+def _write_lineitem(spark, tmp_path, baskets):
+    """Materialize a synthetic lineitem fixture: baskets[i] = iterable
+    of part keys sharing order i."""
+    rows = [
+        (int(o), int(p), 1.0, 0.0, 0.0, 1.0, "N", "O", "1995-01-01")
+        for o, parts in enumerate(baskets)
+        for p in parts
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "l_orderkey long, l_partkey long, l_quantity double, l_discount double,"
+        " l_tax double, l_extendedprice double, l_returnflag string,"
+        " l_linestatus string, l_shipdate string",
+    ).withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
+    df.write.mode("overwrite").parquet(os.path.join(str(tmp_path), "lineitem.parquet"))
+    return str(tmp_path)
+
+
+def test_bfs_layers_on_path_graph(spark, tmp_path):
+    """A 6-vertex path graph built from pairwise baskets: parts 0-1,
+    1-2, ..., each co-bought twice (over the edge threshold). Highest
+    degree belongs to interior vertices; seeds = the 3 top-degree
+    (1, 2, 3 by the (deg desc, id) tiebreak), so hop layers are
+    {1,2,3}=0, {0,4}=1, {5}=2."""
+    from eventstream_benchmark_spark.operators.graph import graph_bfs_hops
+
+    edges = [(i, i + 1) for i in range(5)]
+    baskets = [e for e in edges for _ in range(2)]  # each edge twice
+    sf_dir = _write_lineitem(spark, tmp_path, baskets)
+    got = {
+        r.hops: (r.n_nodes, r.sum_v)
+        for r in graph_bfs_hops(spark, sf_dir).collect()
+    }
+    assert got == {0: (3, 6), 1: (2, 4), 2: (1, 5)}

@@ -95,21 +95,27 @@ def test_frame_sample_fanout(spark, sf_small):
 
 def test_scoped_persists_bounded_and_released(spark, sf_small):
     """The _cache.py contract, end to end: during a sweep at most one
-    query's intermediates occupy executor storage (each persisting query
-    releases its predecessor's at entry), and the harness-side release
-    leaves nothing behind."""
+    query's intermediates occupy executor storage (the registry wrapper
+    releases the previous query's at entry), and the harness-side
+    release leaves nothing behind."""
     from eventstream_benchmark_spark.operators import _cache, all_queries
 
     qs = all_queries()
+    previous: list = []
     for name in (
         "dedup_ngram_jaccard",
         "dedup_minhash_lsh",
         "dedup_simhash",
         "ann_ivf_cosine",
         "pipeline_dedup_ordered",
+        "orders_rfm_segmentation",
     ):
         df = qs[name](spark, sf_small)
         df.count()
+        assert not any(p.is_cached for p in previous), (
+            f"{name} ran with its predecessor's persists still cached"
+        )
+        previous = list(_cache._LIVE)
         # minhash persists the exact-dup group table + the relational
         # (rep_id, doc_id) membership table (round-9: replaced the
         # per-group member array) + representative shingles + capped

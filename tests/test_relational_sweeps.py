@@ -44,6 +44,8 @@ import random
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from tests.sweep_util import quarter as _quarter, sweep_check
 
@@ -211,3 +213,70 @@ def test_relational_core_randomized_oracle_agreement(spark, tmp_path, seed):
     rng = random.Random(seed)
     sf = _build_fixture(rng, tmp_path / f"rel{seed}")
     sweep_check(spark, sf, SWEPT, ("customer", "orders", "part", "events"), seed)
+
+
+def test_morton_interleave_matches_bit_reference(spark):
+    """The div/mod Morton expression equals the classic bit-twiddling
+    interleave for every (d1, d2) in an 8x8 corner plus edge cases."""
+    from eventstream_benchmark_spark.operators.relational import _morton_sql
+
+    def morton_ref(x, y):
+        z = 0
+        for b in range(8):
+            z |= ((x >> b) & 1) << (2 * b)
+            z |= ((y >> b) & 1) << (2 * b + 1)
+        return z
+
+    cases = [(x, y) for x in range(8) for y in range(8)]
+    cases += [(255, 255), (255, 0), (0, 255), (170, 85)]
+    df = spark.createDataFrame(cases, "d1 long, d2 long").withColumn(
+        "z", F.expr(_morton_sql("div"))
+    )
+    for r in df.collect():
+        assert r.z == morton_ref(r.d1, r.d2), (r.d1, r.d2)
+
+
+_SPLIT_CASES = {
+    "ties_heavy": [5] * 20 + [7] * 13 + [9],
+    "n_lt_runs": [3, 1, 2],
+    "n_eq_runs": list(range(8)),
+    "single": [42],
+    "empty": [],
+    "random_997": [random.Random(7).randrange(0, 10**15) for _ in range(997)],
+    "one_bucket": [1000 + i for i in range(100)],
+    "one_per_bucket": [i * (1 << 33) for i in range(50)],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SPLIT_CASES))
+def test_split_points_match_ntile_positions(spark, name):
+    """``_sort_split_points`` selects the k values at EXACTLY the sorted
+    positions ``ntile(SORT_RUNS)`` tile maxima occupy: the bucketed
+    keyed-window spelling and the single-partition ntile spelling are
+    interchangeable BY VALUE, which lets the DuckDB oracle keep its
+    single-node ntile replay while the Spark plan carries no
+    data-sized unkeyed window. The cases are the shapes the
+    closed-form position rule must survive: heavy ties (multiset
+    positions, not row identity), n < RUNS (empty ntile tiles produce
+    no split point), n == RUNS, a single row, an empty sample, all
+    keys in one histogram bucket, and one key per bucket."""
+    from eventstream_benchmark_spark.operators.relational import (
+        SORT_RUNS,
+        _sort_split_points,
+    )
+
+    ks = _SPLIT_CASES[name]
+    df = (
+        spark.createDataFrame([(int(x),) for x in ks], "k long")
+        if ks
+        else spark.createDataFrame([], "k long")
+    )
+    new = _sort_split_points(df).collect()[0]["bs"]
+    old = (
+        df.withColumn("t", F.ntile(SORT_RUNS).over(Window.orderBy("k")))
+        .filter(F.col("t") < SORT_RUNS)
+        .groupBy("t")
+        .agg(F.max("k").alias("b"))
+        .agg(F.sort_array(F.collect_list("b")).alias("bs"))
+    ).collect()[0]["bs"]
+    assert new == old

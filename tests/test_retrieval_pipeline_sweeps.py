@@ -29,6 +29,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from tests.sweep_util import sweep_check
 
@@ -125,3 +126,48 @@ def test_retrieval_pipeline_randomized_oracle_agreement(spark, tmp_path, seed):
     )
     pq.write_table(embeddings, str(root / "embeddings.parquet"))
     sweep_check(spark, str(root), SWEPT, ("documents", "embeddings"), seed)
+
+
+def test_checksum_mod_is_exact_past_int64(spark):
+    """The export-manifest checksum spelling — decimal(38,0) sum +
+    pmod(CHECKSUM_MOD) — must stay exact where a raw BIGINT sum does
+    not survive: fp values near 2^62 summed over a handful of rows
+    already exceed 2^63. Under this environment's Spark 4 default
+    (ansi.enabled=true, verified here) the raw spelling RAISES
+    ARITHMETIC_OVERFLOW — i.e. the query simply dies at 100 TB — and
+    under ansi=false clusters it wraps silently; DuckDB raises at its
+    HUGEINT→BIGINT cast. The 128-bit + explicit-modulus spelling is
+    the only variant with a DEFINED value, identical in both engines.
+    Pins that contract against a drive-by simplification back to
+    sum(bigint)."""
+    import duckdb
+
+    from eventstream_benchmark_spark.operators.pipeline import CHECKSUM_MOD
+
+    vals = [(1 << 62) - 3, (1 << 62) - 1, (1 << 61) + 7, 12345, (1 << 60)]
+    expected = sum(vals) % CHECKSUM_MOD
+    assert sum(vals) >= 1 << 63, "fixture must actually exceed int64"
+
+    df = spark.createDataFrame([(v,) for v in vals], "fp long")
+    got = df.agg(
+        F.pmod(F.sum(F.col("fp").cast("decimal(38,0)")), F.lit(CHECKSUM_MOD))
+        .cast("bigint")
+        .alias("c")
+    ).collect()[0]["c"]
+    assert got == expected
+
+    # the raw-bigint spelling demonstrably does NOT survive the same
+    # input: ANSI Spark raises (the failure the decimal spelling
+    # closes); a non-ANSI session would wrap to a value != the true sum
+    try:
+        wrapped = df.agg(F.sum("fp").alias("s")).collect()[0]["s"]
+        assert wrapped != sum(vals), "int64 sum cannot hold this total"
+    except Exception:
+        pass  # ANSI overflow raise — the expected failure mode here
+
+    # DuckDB twin: HUGEINT sum % MOD == the same exact value
+    duck = duckdb.connect().execute(
+        f"SELECT CAST(sum(CAST(v AS HUGEINT)) % {CHECKSUM_MOD} AS BIGINT) "
+        f"FROM (SELECT unnest({vals!r}) AS v)"
+    ).fetchone()[0]
+    assert duck == expected

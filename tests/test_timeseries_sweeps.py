@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import random
 
+import duckdb
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -123,3 +125,38 @@ def test_timeseries_randomized_oracle_agreement(spark, tmp_path, seed):
     root.mkdir()
     pq.write_table(_build_events(rng), str(root / "events.parquet"))
     sweep_check(spark, str(root), SWEPT, ("events",), seed)
+
+
+def test_weekday_contrast_zero_regime_guard(spark, tmp_path):
+    """An event type with zero weekend events yields a NULL display
+    ratio (not Infinity / an engine-dependent cast) and still
+    hash-matches the oracle."""
+    from eventstream_benchmark_spark.operators import eventstream as es
+    from tests.oracle_harness import compare
+
+    # wd_only: 40 events all on a Wednesday; mixed: both regimes
+    rows = [(i, "wd_only", pd.Timestamp("2024-01-03 10:00:00") + pd.Timedelta(minutes=i)) for i in range(40)]
+    rows += [(100 + i, "mixed", pd.Timestamp("2024-01-03 10:00:00") + pd.Timedelta(minutes=i)) for i in range(7)]
+    rows += [(200 + i, "mixed", pd.Timestamp("2024-01-06 10:00:00") + pd.Timedelta(minutes=i)) for i in range(5)]
+    pdf = pd.DataFrame(rows, columns=["event_id", "event_type", "ts"])
+    pdf.to_parquet(tmp_path / "events.parquet", index=False)
+
+    out = es.events_weekday_contrast(spark, str(tmp_path)).toPandas()
+    wd_only = out[out.event_type == "wd_only"]
+    assert len(wd_only) == 1
+    assert pd.isna(wd_only.rate_ratio_micro.iloc[0])
+    mixed = out[out.event_type == "mixed"]
+    # NaN is not None, so an `is not None` check would be vacuous here
+    assert not pd.isna(mixed.rate_ratio_micro.iloc[0])
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'events.parquet'}')"
+        )
+        duck = con.execute(es.ORACLES["events_weekday_contrast"]).fetchdf()
+    finally:
+        con.close()
+    issues = compare(es.events_weekday_contrast(spark, str(tmp_path)), duck)
+    assert not issues, "; ".join(issues)
