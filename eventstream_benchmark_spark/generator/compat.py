@@ -235,7 +235,6 @@ class EventStream:
         """Lazy per-event iterator (reference ``eventstream.py:429-432``)."""
         if self._mode == "exact":
             ts, ty, label = self._exact_arrays()
-            for i in range(len(ts)):
-                yield int(ts[i]), int(ty[i]), bool(label[i])
+            yield from zip(ts.tolist(), ty.tolist(), label.tolist())
             return
         yield from spark_gen.stream_iter(self.df)

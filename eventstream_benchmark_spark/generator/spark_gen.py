@@ -21,7 +21,11 @@ Three generation paths, one schema:
 Export surface mirrors A9-A11: ``to_numpy`` ([N,3] int array, bool
 upcast — ``eventstream.py:413-415``), ``write_csv`` (header
 ``timestamp,event_type,is_pattern``, ints — ``:417-427``),
-``stream_iter`` (ordered row generator — ``:429-432``).
+``stream_iter`` (ordered event generator — ``:429-432``). All three
+read the stream in ``(shard, event_id)`` order through ``_ordered``:
+one hash exchange to a single partition, sorted inside it. A global
+``orderBy`` would give the same order, but its range partitioner runs
+a sampling job that generates the whole stream a second time.
 """
 
 from __future__ import annotations
@@ -478,6 +482,11 @@ def stream_df_cached(
     return spark.read.parquet(path)
 
 
+def _ordered(df: DataFrame) -> DataFrame:
+    """The stream in ``(shard, event_id)`` order, in one partition."""
+    return df.repartition(1).sortWithinPartitions("shard", "event_id")
+
+
 def to_numpy(df: DataFrame) -> np.ndarray:
     """A9's ``[N, 3]`` int array (reference ``eventstream.py:413-415``):
     columns ``(timestamp, event_type, is_pattern)`` in stream order,
@@ -485,7 +494,7 @@ def to_numpy(df: DataFrame) -> np.ndarray:
     reference. Driver-side materialization — test/demo scale only, like
     the reference's own ``to_numpy``."""
     pdf = (
-        df.orderBy("shard", "event_id")
+        _ordered(df)
         .select("ts", "event_type", F.col("is_pattern").cast("long"))
         .toPandas()
     )
@@ -499,13 +508,12 @@ def write_csv(df: DataFrame, path: str) -> None:
     ``_SUCCESS``); ``write_csv_file`` below delivers the reference's
     single-file contract."""
     (
-        df.orderBy("shard", "event_id")
+        _ordered(df)
         .select(
             F.col("ts").alias("timestamp"),
             F.col("event_type"),
             F.col("is_pattern").cast("int").alias("is_pattern"),
         )
-        .coalesce(1)
         .write.mode("overwrite")
         .option("header", True)
         .csv(path)
@@ -514,9 +522,9 @@ def write_csv(df: DataFrame, path: str) -> None:
 
 def write_csv_file(df: DataFrame, path: str) -> None:
     """The reference's single-CSV-file semantics on top of the Spark
-    sink: write the coalesced directory next to ``path``, then move
-    the one part file INTO ``path`` — so a drop-in caller gets exactly
-    the file the reference API would have written."""
+    sink: write the single-partition directory next to ``path``, then
+    move the one part file INTO ``path`` — so a drop-in caller gets
+    exactly the file the reference API would have written."""
     import glob
     import shutil
 
@@ -529,7 +537,13 @@ def write_csv_file(df: DataFrame, path: str) -> None:
 
 def stream_iter(df: DataFrame) -> Iterator[tuple[int, int, bool]]:
     """A11's pull-based one-event-at-a-time iterator
-    (``eventstream.py:429-432``): ordered ``toLocalIterator`` so the
-    consumer loop (``main.py:44-46``) works unchanged against Spark."""
-    for row in df.orderBy("shard", "event_id").select("ts", "event_type", "is_pattern").toLocalIterator():
-        yield int(row.ts), int(row.event_type), bool(row.is_pattern)
+    (``eventstream.py:429-432``), so the consumer loop
+    (``main.py:44-46``) works unchanged against Spark. Yields Python
+    ``(int, int, bool)`` in ``(shard, event_id)`` order.
+
+    The ordered three-column stream is collected to the driver through
+    Arrow before the first event is yielded, so the whole stream is
+    held in driver memory while it is consumed — as the reference's
+    ``stream()`` holds its arrays. Demo/test scale, like ``to_numpy``."""
+    pdf = _ordered(df).select("ts", "event_type", "is_pattern").toPandas()
+    yield from zip(pdf["ts"].tolist(), pdf["event_type"].tolist(), pdf["is_pattern"].tolist())

@@ -165,8 +165,9 @@ def _degree_oriented(e: DataFrame, broadcast_degs: bool = False) -> DataFrame:
     the 1.2M-edge sf1 flood against the ~25k-row degree table twice,
     ~1.8-2.3 s; hinted 1.4-1.8 s in every interleaved round). Opt-in
     ONLY when the caller has MEASURED the edge set under
-    TRIANGLE_BROADCAST_CAP (|V| <= 2E, two longs per row — strictly
-    smaller than the adjacency broadcast the same gate authorizes):
+    TRIANGLE_BROADCAST_CAP (|V| <= 2E rows of two longs, so <= ~4E
+    longs — the same order as the adjacency broadcast the same gate
+    authorizes, not strictly smaller):
     vertices are catalog-scale at 100 TB, so an unconditional hint
     would collect a dimension-scale table to the driver."""
     degs = (
@@ -196,8 +197,9 @@ def _degree_oriented(e: DataFrame, broadcast_degs: bool = False) -> DataFrame:
 # relation costs several times its raw bytes (driver-side collect +
 # UnsafeHashedRelation build, replicated per executor), so the cap is
 # sized for the HASHED footprint (~0.5-1 GB) to stay inside ordinary
-# executor memory.  The same measured gate authorizes the (strictly
-# smaller) degree-table hint in _degree_oriented.
+# executor memory.  The same measured gate authorizes the degree-table
+# hint in _degree_oriented: ≤ 2E rows of two longs (≤ ~4E longs), the
+# same order as the adjacency payload, not strictly smaller.
 TRIANGLE_BROADCAST_CAP = 8_000_000
 
 

@@ -1471,3 +1471,43 @@ def test_perplexity_bucket_broadcast_only_bounded_windows(spark, sf_small):
             "struct<doc_id:bigint,text:string,lang:string>",
             "struct<lang:string>",
         ), rs
+
+
+def test_generator_exports_single_partition_no_range_sort(spark, tmp_path, monkeypatch):
+    """The three ordered exports (``to_numpy``, ``write_csv``,
+    ``stream_iter``) over the sharded stream order it through one
+    exchange to a single partition, never a global sort: its range
+    partitioner runs a sampling job that generates the stream twice."""
+    from eventstream_benchmark_spark.generator import (
+        PatternConfig,
+        StreamConfig,
+        stream_df_sharded,
+        stream_iter,
+        to_numpy,
+        write_csv,
+    )
+
+    pcfg = PatternConfig(n_patterns=4, pattern_length=5, n_types=4, seed=3)
+    df = stream_df_sharded(spark, pcfg, StreamConfig(n_types=4, total_events=100, random_ratio=0.5, seed=5),
+                           n_shards=4)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plans = []
+
+    def capture(cls, name, frame_of):
+        run = getattr(cls, name)
+
+        def spy(self, *a, **k):
+            plans.append(frame_of(self)._jdf.queryExecution().explainString(mode))
+            return run(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, spy)
+
+    capture(type(df), "toPandas", lambda d: d)
+    capture(type(df.write), "csv", lambda w: w._df)
+    to_numpy(df)
+    write_csv(df, str(tmp_path / "csv"))
+    next(stream_iter(df))
+    assert len(plans) == 3
+    for plan in plans:
+        assert "rangepartitioning" not in plan
+        assert plan.count("SinglePartition") == 1
