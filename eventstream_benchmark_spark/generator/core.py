@@ -12,7 +12,10 @@ Draw order contract (the part parity hinges on):
   ``integers`` draw for the whole type matrix, then row-major
   per-cell interval draws for gaps.
 - per random event (ref ``:314-348``): interval draw, then jitter
-  draw, then ``choice(n_types)`` for the event type.
+  draw, then the event type. The reference calls ``choice(n_types)``;
+  ``integers(0, n_types)`` draws the same value from the same bits at
+  a quarter of the call cost, and ``test_choice_equals_integers_draw``
+  pins that equality.
 - per pattern instance (ref ``:351-385``): ``integers(0, n_patterns)``
   pick, then one jitter draw per intra-pattern gap.
 
@@ -153,7 +156,8 @@ def build_stream(
             gap = base if density_off else max(1, int(round(base / rate(clock))))
             clock += gap
             out_ts[filled] = clock
-            out_ty[filled] = int(rng.choice(n_types))
+            # the reference's choice(n_types): same value, same bits
+            out_ty[filled] = int(rng.integers(0, n_types))
             out_label[filled] = False
             n_random += 1
             filled += 1

@@ -117,7 +117,7 @@ def generate_stream_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def generate_stream_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B34 (scale mode) — 8× the golden config across 32 parallel
-    applyInPandas shards; per-shard invariant summary (event count,
+    mapInPandas shards; per-shard invariant summary (event count,
     integer pattern-event count, time span) so the driver sees one row
     per shard. Hash-checked against the precomputed
     ``_SHARDED_SUMMARY_ROWS`` constant. The pattern share is pinned as

@@ -7,9 +7,9 @@ Three generation paths, one schema:
   right whenever one logical stream must match the reference
   draw-for-draw (reference ``eventstream.py:288-409``).
 - **sharded** — the 100 TB path: S independent sub-streams, each
-  generated sequentially inside one ``applyInPandas`` task with a
-  SeedSequence-spawned RNG. Embarrassingly parallel (the only shuffle
-  is the `spark.range(S)` groupBy, S rows); per-shard throughput is
+  generated sequentially with a SeedSequence-spawned RNG inside one
+  ``mapInPandas`` task per core, over contiguous runs of shard ids.
+  Embarrassingly parallel (no shuffle at all); per-shard throughput is
   the reference's single-core rate, so total rate scales with cores.
   Shard streams preserve every distributional invariant (ratio,
   interval laws, contiguous patterns, density profile) but are not
@@ -76,13 +76,17 @@ STREAM_SCHEMA = StructType(
 def patterns_df(spark: SparkSession, pcfg: PatternConfig) -> DataFrame:
     """PatternSet as a (broadcastable) DataFrame — A5/A6. Pattern sets
     are n_patterns × L ints, always tiny; generated driver-side for
-    exact reference parity, then parallelized."""
+    exact reference parity, then handed to Spark as a pandas frame
+    (an Arrow-built local table, no Python worker when it is read)."""
     types, gaps = core.build_patterns(pcfg)
-    rows = [
-        (pid, [int(x) for x in types[pid]], [int(x) for x in gaps[pid]])
-        for pid in range(pcfg.n_patterns)
-    ]
-    return spark.createDataFrame(rows, PATTERN_SCHEMA)
+    pdf = pd.DataFrame(
+        {
+            "pattern_id": np.arange(pcfg.n_patterns, dtype=np.int32),
+            "types": list(types),
+            "gaps": list(gaps),
+        }
+    )
+    return spark.createDataFrame(pdf, PATTERN_SCHEMA)
 
 
 def _arrays_to_pdf(ts: np.ndarray, ty: np.ndarray, label: np.ndarray,
@@ -115,7 +119,15 @@ def stream_df_sharded(
     pattern_arrays: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Scale-mode stream: ``n_shards`` independent sub-streams, each a
-    sequential NumPy generation inside one ``applyInPandas`` task.
+    sequential NumPy generation, over one ``mapInPandas`` task per core.
+
+    ``spark.range(0, S, 1, T)`` with ``T = min(S, defaultParallelism)``
+    hands each task a contiguous run of shard ids, which it generates
+    in order, so the partitions are already in ``(shard, event_id)``
+    order and no shuffle places the shards. One task per core is one
+    wave of Python tasks; a wave costs a fixed task start-up, so one
+    task per shard (or a hash placement that leaves some tasks with
+    more shards than others) adds waves without adding throughput.
 
     Pattern matrices are built once on the driver and shipped in the
     task closure (tiny). Each shard gets a SeedSequence-spawned RNG —
@@ -131,31 +143,29 @@ def stream_df_sharded(
     stride = -(-scfg.total_events // n_shards)  # ceil
     cfg = scfg
 
-    def gen_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        n_events = sizes[shard]
-        if n_events == 0:
-            return _arrays_to_pdf(
-                np.empty(0, np.int64), np.empty(0, np.int32), np.empty(0, bool), shard, 0
-            )
-        shard_cfg = dataclasses.replace(cfg, total_events=n_events)
+    def gen_one(shard: int) -> pd.DataFrame:
+        shard_cfg = dataclasses.replace(cfg, total_events=sizes[shard])
         rng = core.shard_rng(cfg.seed, shard)
         # fast path: same laws/schedule/clamps, batched draws (§4.2
         # scale-mode fidelity is distributional, not draw-for-draw)
         ts, ty, label = core.build_stream_fast(shard_cfg, types, gaps, rng=rng)
         return _arrays_to_pdf(ts, ty, label, shard, id_offset=shard * stride)
 
-    shards = spark.range(n_shards).select(F.col("id").cast("int").alias("shard"))
-    return shards.repartition(n_shards, "shard").groupBy("shard").applyInPandas(
-        gen_one, STREAM_SCHEMA
-    )
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for shard in pdf["id"].tolist():
+                if sizes[shard]:
+                    yield gen_one(shard)
+
+    n_tasks = min(n_shards, spark.sparkContext.defaultParallelism)
+    return spark.range(0, n_shards, 1, n_tasks).mapInPandas(gen, STREAM_SCHEMA)
 
 
 #: closed-form samplers exist for these laws only: inverse-CDF /
 #: affine maps of keyed uniforms (uniform, geometric, laplace) or the
 #: Box–Muller map of two keyed uniforms (gaussian, round 9). Poisson
 #: intervals have no closed-form inverse (sequential acceptance loop)
-#: — those configs use the sharded applyInPandas path instead.
+#: — those configs use the sharded mapInPandas path instead.
 _PURE_INTERVALS = ("fixed", "uniform", "geometric")
 _PURE_JITTERS = ("none", "uniform", "gaussian", "laplace")
 
@@ -298,8 +308,12 @@ def stream_df_pure(
     precomputed slot schedule → broadcast-join the pattern set →
     ``posexplode`` pattern positions → closed-form expr samplers (A2/A3
     as inverse-CDF maps of counter-based uniforms) → per-shard windowed
-    prefix sum for the clock. No applyInPandas, no Python in the plan;
-    every event is a Catalyst expression of (seed, shard, slot, pos).
+    prefix sum for the clock. No Python in the plan, and none at run
+    time: the driver-built inputs (shard sizes, slot schedule, pattern
+    set) enter from pandas frames, which Arrow turns into local table
+    scans — a list of tuples would become an RDD scan that runs in
+    Python workers. Every event is a Catalyst expression of (seed,
+    shard, slot, pos).
 
     Supported closed-form laws: ``density_mode="none"`` (the clock is a
     plain prefix sum — sin density's gap↔clock recurrence is the one
@@ -353,8 +367,11 @@ def stream_df_pure(
         ignore_index=True,
     )
     sched = F.broadcast(spark.createDataFrame(sched_pdf, _PURE_SCHED_SCHEMA))
+    live = np.flatnonzero(np.asarray(sizes) > 0)
     shards = spark.createDataFrame(
-        [(s, sizes[s]) for s in range(n_shards) if sizes[s] > 0],
+        pd.DataFrame(
+            {"shard": live.astype(np.int32), "size": np.asarray(sizes, np.int32)[live]}
+        ),
         "shard int, size int",
     )
     seed = F.lit(int(scfg.seed))

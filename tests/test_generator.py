@@ -384,18 +384,27 @@ def _driver_stream(mode: str, scfg: StreamConfig, n_shards: int) -> np.ndarray:
 
 
 @pytest.mark.parametrize(
-    "mode,n_events",
-    [("sharded", 0), ("sharded", 3), ("sharded", 10_007), ("exact", 2_000)],
+    "mode,n_events,n_shards",
+    [
+        pytest.param("sharded", 0, 8, id="sharded-0"),
+        pytest.param("sharded", 3, 8, id="sharded-3"),
+        pytest.param("sharded", 10_007, 8, id="sharded-10007"),
+        pytest.param("sharded", 20, 32, id="sharded-20-32shards"),
+        pytest.param("sharded", 1_001, 2, id="sharded-1001-2shards"),
+        pytest.param("exact", 2_000, 8, id="exact-2000"),
+    ],
 )
-def test_exports_share_one_order(spark, tmp_path, mode, n_events):
+def test_exports_share_one_order(spark, tmp_path, mode, n_events, n_shards):
     """``stream_iter``, ``to_numpy`` and the ``write_csv`` data rows are
     the same rows in the same order, and equal the driver-built stream
     in ``(shard, event_id)`` order. Sharded cases cover empty streams,
-    empty shards (3 events over 8) and uneven shard sizes (10,007)."""
+    empty shards (3 events over 8), uneven shard sizes (10,007), the
+    32-shard scale layout (several shards per task, the last tasks'
+    shards empty at 20 events) and fewer shards than cores (2)."""
     scfg = StreamConfig(n_types=5, total_events=n_events, random_ratio=0.6, seed=99)
     df = (stream_df_exact(spark, PCFG, scfg) if mode == "exact"
-          else stream_df_sharded(spark, PCFG, scfg, n_shards=8))
-    expected = _driver_stream(mode, scfg, 8)
+          else stream_df_sharded(spark, PCFG, scfg, n_shards=n_shards))
+    expected = _driver_stream(mode, scfg, n_shards)
 
     events = list(stream_iter(df))
     assert all(type(t) is int and type(e) is int and type(p) is bool for t, e, p in events)
@@ -413,6 +422,25 @@ def test_exports_share_one_order(spark, tmp_path, mode, n_events):
     assert lines[0] == "timestamp,event_type,is_pattern"
     rows = [[int(v) for v in line.split(",")] for line in lines[1:]]
     np.testing.assert_array_equal(np.array(rows, dtype=np.int64).reshape(-1, 3), expected)
+
+
+def test_choice_equals_integers_draw():
+    """``core.build_stream`` draws a noise event's type with
+    ``integers(0, n)`` where the reference calls ``choice(n)``. The
+    exact path matches the reference only while both return the same
+    value from the same bits, interleaved with the path's other draws
+    (Poisson intervals, ``integers`` jitters and pattern picks)."""
+    for n in (1, 2, 6, 7, 1000):
+        for seed in (0, 1, 42, 2024):
+            ref, ours = core.make_rng(seed), core.make_rng(seed)
+            for step in range(1500):
+                if step % 3 == 0:
+                    assert ref.poisson(4.0) == ours.poisson(4.0)
+                if step % 5 == 0:
+                    assert ref.integers(-3, 4) == ours.integers(-3, 4)
+                assert ref.choice(n) == ours.integers(0, n)
+            # both generators consumed the same bits
+            assert ref.integers(0, 2**62) == ours.integers(0, 2**62)
 
 
 def test_exact_summary_oracle_constants_pinned():
@@ -494,7 +522,7 @@ def test_sharded_summary_constants_pinned():
     """The generate_stream_sharded oracle is a precomputed VALUES table
     of per-shard (n, n_pattern, span) summaries; recompute each
     shard from core's NumPy path (same SeedSequence spawning as the
-    applyInPandas task) so RNG drift fails here first. n_pattern is an
+    mapInPandas task) so RNG drift fails here first. n_pattern is an
     exact integer count — no rounding-mode dependence (Spark HALF_UP
     vs Python half-even) can split the test from the driver check."""
     import dataclasses

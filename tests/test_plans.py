@@ -154,6 +154,9 @@ def test_puredf_generator_no_python_no_global_window(spark, sf_small):
             "FlatMapGroupsInPandas",
         ):
             assert node not in plan, f"{name}: unexpected Python node {node}"
+        # driver-built inputs are Arrow local tables; an RDD scan of
+        # Python tuples would run in Python workers at run time
+        assert "ExistingRDD" not in plan, f"{name}: Python-fed RDD scan"
         assert "BroadcastHashJoin" in plan  # schedule + pattern-set joins
         assert "SortMergeJoin" not in plan
         assert "CartesianProduct" not in plan
@@ -447,6 +450,35 @@ def test_triangle_count_joins_stay_hashed(spark, sf_small):
     assert plan.count("BroadcastNestedLoopJoin Cross") <= 2
     n_bnlj_nodes = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan))
     assert n_bnlj_nodes == plan.count("Join type: Cross")
+
+
+@pytest.mark.parametrize("side", ["under_cap", "over_cap"])
+def test_triangle_broadcasts_follow_cap(spark, monkeypatch, side):
+    """TRIANGLE_BROADCAST_CAP gates every broadcast of the triangle
+    count: the degree-table hints of ``_degree_oriented`` and the
+    adjacency hints of ``_count_triangles``. With the auto-threshold
+    off only those hints can broadcast, so an edge set over the cap
+    plans no BroadcastExchange and one under it plans them."""
+    from eventstream_benchmark_spark.operators import graph
+
+    edges = [(a, b) for a in range(6) for b in range(a + 1, 6)]
+    under = side == "under_cap"
+    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_CAP", len(edges) if under else len(edges) - 1)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        e = spark.createDataFrame(edges, "p1 long, p2 long")
+        # the gate graph_triangle_count applies to its measured edge count
+        o = graph._degree_oriented(e, broadcast_degs=len(edges) <= graph.TRIANGLE_BROADCAST_CAP)
+        plans = [
+            df._jdf.queryExecution().explainString(mode)
+            for df in (o, graph._count_triangles(o, len(edges)))
+        ]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    for plan in plans:
+        assert ("BroadcastExchange" in plan) == under
 
 
 def test_tfidf_builds_lazily_one_action(spark, sf_small):
@@ -1511,3 +1543,27 @@ def test_generator_exports_single_partition_no_range_sort(spark, tmp_path, monke
     for plan in plans:
         assert "rangepartitioning" not in plan
         assert plan.count("SinglePartition") == 1
+
+
+def test_sharded_generator_one_python_wave_no_shuffle(spark):
+    """``stream_df_sharded`` places its shards with no shuffle: one
+    MapInPandas over ``spark.range``, split into one task per core (at
+    most one per shard), each generating a contiguous run of shards.
+    An action then starts one wave of Python tasks, not a hash
+    placement's uneven tasks behind an exchange."""
+    from eventstream_benchmark_spark.generator import (
+        PatternConfig,
+        StreamConfig,
+        stream_df_sharded,
+    )
+
+    pcfg = PatternConfig(n_patterns=4, pattern_length=5, n_types=4, seed=3)
+    df = stream_df_sharded(spark, pcfg, StreamConfig(n_types=4, total_events=100, random_ratio=0.5, seed=5),
+                           n_shards=8)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+    for node in ("Exchange", "FlatMapGroupsInPandas"):
+        assert node not in plan, f"unexpected {node}"
+    assert df.rdd.getNumPartitions() == min(8, spark.sparkContext.defaultParallelism)
