@@ -354,6 +354,9 @@ def stream_df_pure(
                 "use stream_df_sharded"
             )
 
+    if scfg.total_events == 0:  # no slot schedule to build
+        return spark.createDataFrame([], STREAM_SCHEMA)
+
     from pyspark.sql import Window as W
 
     sizes = core.shard_sizes(scfg.total_events, n_shards)

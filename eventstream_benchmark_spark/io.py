@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["TABLES", "load_table", "load_tables", "register_views", "default_sf_dir"]
 
@@ -34,6 +35,25 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: inferred parquet schema per (path, file stamps, nanosAsLong); see load_table
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _file_stamps(path: str) -> tuple:
+    """``(name, st_ino, st_mtime_ns, st_size)`` of the parquet file at
+    ``path``, or of every file under it when ``path`` is a directory."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_ino, st.st_mtime_ns, st.st_size),)
+    stamps = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            stamps.append((os.path.relpath(p, path), st.st_ino, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(stamps))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (lazy parquet scan).
 
@@ -47,6 +67,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     columns are cast to the session-TZ TimestampType (value-identical
     under the engine's pinned UTC session, and keeps every downstream
     comparison against ``cast('timestamp')`` literals well-typed).
+
+    The inferred parquet schema is memoized in ``_SCHEMAS``: a bare
+    ``spark.read.parquet`` merges footers in a Spark job on every call,
+    even for one file, while ``spark.read.schema(...)`` starts none.
+    The key is the absolute path, each data file's ``(name, st_ino,
+    st_mtime_ns, st_size)`` and the session's ``nanosAsLong`` (which
+    changes the inferred ``ts`` type), so a rewritten fixture or a
+    flipped conf is inferred again. Writes are idempotent — two
+    threads racing on one key store equal schemas.
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
@@ -58,7 +87,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    try:
+        key = (
+            os.path.abspath(path),
+            _file_stamps(path),
+            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        )
+    except OSError:  # missing table: the reader raises its own error
+        key = None
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     for field in df.schema.fields:
         type_name = field.dataType.typeName()
         if field.name == "ts" and type_name in ("long", "bigint"):

@@ -37,6 +37,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,17 +52,21 @@ PATTERN_SEQ = ("view", "click", "purchase")
 
 @contextmanager
 def _state_shuffle(spark: SparkSession):
-    """Size ``spark.sql.shuffle.partitions`` to the session's cores for
-    the duration of a streaming run, then restore the previous value.
-    AQE coalesces over-partitioned batch shuffles at runtime, but
-    stateful streaming shuffles bypass AQE — the number is the
-    state-store shard count, and a vanilla session's 200 means 200
-    tasks per micro-batch regardless of data volume. Restoring on exit
+    """Set ``spark.sql.shuffle.partitions`` to the session's
+    ``defaultParallelism`` for the duration of a streaming run, then
+    restore the previous value. Stateful streaming shuffles bypass AQE,
+    so the number is fixed: it is the state-store shard count, and each
+    shard is one task of every micro-batch. A vanilla session's 200
+    means 200 tasks per batch regardless of data volume; one shard per
+    core runs each stateful batch in one wave of tasks, where any more
+    shards start a second wave (about 0.25 s for Python state-function
+    tasks on a 4-core host) for no added parallelism. Restoring on exit
     keeps the setting from leaking into later batch queries (which
     would skew bench timings depending on execution order)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cores = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(8, min(2 * cores, 64))))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     try:
         yield
     finally:
@@ -144,6 +149,22 @@ def streaming_replay_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _in_event_order(pdf_iter, column: str) -> list:
+    """One group's ``column`` in ``(ts, event_id)`` order, as Python
+    scalars, for the ``applyInPandasWithState`` functions. A group's
+    micro-batch can arrive as several Arrow chunks with no global order
+    guarantee, so the chunks are concatenated before the one sort:
+    sorting per chunk would replay events out of order for any user
+    whose batch exceeds ``arrow.maxRecordsPerBatch``. ``np.lexsort``
+    on numpy columns costs a fraction of a multi-key ``sort_values``."""
+    chunks = list(pdf_iter)
+    if not chunks:
+        return []
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    order = np.lexsort((pdf["event_id"].to_numpy(), pdf["ts"].to_numpy()))
+    return pdf[column].to_numpy()[order].tolist()
+
+
 def streaming_pattern_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B37 — stateful per-user pattern-progress tracking.
 
@@ -160,24 +181,17 @@ def streaming_pattern_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def track(key, pdf_iter, state: GroupState):
         progress, completed, seen = state.get if state.exists else (0, 0, 0)
-        # A group's micro-batch arrives as multiple Arrow chunks with no
-        # global order guarantee — concatenate first, sort once; sorting
-        # per-chunk would replay events out of (ts, event_id) order for
-        # any user whose batch exceeds arrow.maxRecordsPerBatch.
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-            for et in pdf["event_type"]:
-                seen += 1
-                if et == seq[progress]:
-                    progress += 1
-                    if progress == len(seq):
-                        completed += 1
-                        progress = 0
-                elif et == seq[0]:
-                    progress = 1
-                else:
+        for et in _in_event_order(pdf_iter, "event_type"):
+            seen += 1
+            if et == seq[progress]:
+                progress += 1
+                if progress == len(seq):
+                    completed += 1
                     progress = 0
+            elif et == seq[0]:
+                progress = 1
+            else:
+                progress = 0
         state.update((progress, completed, seen))
         yield pd.DataFrame(
             {
@@ -228,13 +242,9 @@ def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fold(key, pdf_iter, state: GroupState):
         y, n = state.get if state.exists else (None, 0)
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-            for x in pdf["value"]:
-                x = float(x)
-                y = x if y is None else (y + x) / 2
-                n += 1
+        for x in _in_event_order(pdf_iter, "value"):
+            y = x if y is None else (y + x) / 2
+            n += 1
         state.update((y, n))
         yield pd.DataFrame({"user_id": [key[0]], "ewma": [y], "n_events": [n]})
 

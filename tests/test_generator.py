@@ -387,6 +387,7 @@ def _driver_stream(mode: str, scfg: StreamConfig, n_shards: int) -> np.ndarray:
     "mode,n_events,n_shards",
     [
         pytest.param("sharded", 0, 8, id="sharded-0"),
+        pytest.param("pure", 0, 8, id="pure-0"),
         pytest.param("sharded", 3, 8, id="sharded-3"),
         pytest.param("sharded", 10_007, 8, id="sharded-10007"),
         pytest.param("sharded", 20, 32, id="sharded-20-32shards"),
@@ -400,10 +401,17 @@ def test_exports_share_one_order(spark, tmp_path, mode, n_events, n_shards):
     in ``(shard, event_id)`` order. Sharded cases cover empty streams,
     empty shards (3 events over 8), uneven shard sizes (10,007), the
     32-shard scale layout (several shards per task, the last tasks'
-    shards empty at 20 events) and fewer shards than cores (2)."""
+    shards empty at 20 events) and fewer shards than cores (2). The
+    pure-DataFrame path is checked on its empty stream only: its draws
+    are keyed hashes, not the driver stream's."""
     scfg = StreamConfig(n_types=5, total_events=n_events, random_ratio=0.6, seed=99)
-    df = (stream_df_exact(spark, PCFG, scfg) if mode == "exact"
-          else stream_df_sharded(spark, PCFG, scfg, n_shards=n_shards))
+    if mode == "exact":
+        df = stream_df_exact(spark, PCFG, scfg)
+    elif mode == "sharded":
+        df = stream_df_sharded(spark, PCFG, scfg, n_shards=n_shards)
+    else:  # the pure path has no closed-form poisson sampler
+        scfg = dataclasses.replace(scfg, rand_interval_dist="uniform")
+        df = stream_df_pure(spark, PCFG, scfg, n_shards=n_shards)
     expected = _driver_stream(mode, scfg, n_shards)
 
     events = list(stream_iter(df))

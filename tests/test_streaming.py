@@ -12,6 +12,7 @@
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 import pandas as pd
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 from eventstream_benchmark_spark.io import load_table
 from eventstream_benchmark_spark.streaming.queries import (
     PATTERN_SEQ,
+    _in_event_order,
     streaming_pattern_state,
     streaming_replay_tumbling,
 )
@@ -122,11 +124,11 @@ def test_foreachbatch_sink_parquet(spark, sf_small, tmp_path):
     assert "batch_id" in landed.columns
 
 
-def test_pattern_state_matches_offline_replay(spark, sf_small):
-    got = streaming_pattern_state(spark, sf_small).toPandas().set_index("user_id")
+def _assert_pattern_state_matches_offline_replay(spark, sf_dir):
+    got = streaming_pattern_state(spark, sf_dir).toPandas().set_index("user_id")
 
     events = (
-        load_table(spark, sf_small, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", "ts", "event_id", "event_type")
         .toPandas()
         .sort_values(["user_id", "ts", "event_id"])
@@ -147,6 +149,85 @@ def test_pattern_state_matches_offline_replay(spark, sf_small):
         assert int(row["n_events"]) == len(grp)
         assert int(row["completed"]) == completed, f"user {user}"
         assert int(row["progress"]) == progress, f"user {user}"
+
+
+def test_pattern_state_matches_offline_replay(spark, sf_small):
+    _assert_pattern_state_matches_offline_replay(spark, sf_small)
+
+
+def test_in_event_order_concatenates_then_sorts():
+    """Chunks arrive in no particular order; the fold sees one
+    ``(ts, event_id)`` order across all of them."""
+    ts = pd.to_datetime(["2024-01-01 00:00:02", "2024-01-01 00:00:01",
+                         "2024-01-01 00:00:01", "2024-01-01 00:00:00"])
+    pdf = pd.DataFrame({"ts": ts, "event_id": [7, 6, 5, 8], "v": ["a", "b", "c", "d"]})
+    chunks = [pdf.iloc[:2], pdf.iloc[2:]]
+    assert _in_event_order(iter(chunks), "v") == ["d", "c", "b", "a"]
+    assert _in_event_order(iter(chunks[1:]), "v") == ["d", "c"]
+    assert _in_event_order(iter([]), "v") == []
+
+
+def test_state_functions_fold_multi_chunk_batches(spark, sf_small):
+    """With two records per Arrow batch every user's micro-batch reaches
+    the state function as several chunks; both folds must still replay
+    each user's events in ``(ts, event_id)`` order."""
+    from eventstream_benchmark_spark.streaming.queries import (
+        ORACLES,
+        streaming_ewma_state,
+    )
+    from tests.oracle_harness import check_query
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        _assert_pattern_state_matches_offline_replay(spark, sf_small)
+        issues = check_query(spark, sf_small, "streaming_ewma_state",
+                             streaming_ewma_state, ORACLES["streaming_ewma_state"])
+        assert not issues, "; ".join(issues)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stateful_batches_run_one_wave(spark, sf_small):
+    """The state store has one shard per core, so each stateful
+    micro-batch is one wave of tasks, and the session's shuffle width
+    is restored after the run."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Shards(StreamingQueryListener):
+        def __init__(self):
+            self.seen: list[int] = []
+            self.terminated = 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                self.seen.append(int(ops[0].numShufflePartitions))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.terminated += 1
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    listener = Shards()
+    spark.streams.addListener(listener)
+    try:
+        streaming_pattern_state(spark, sf_small).collect()
+        deadline = time.monotonic() + 10  # events arrive asynchronously
+        while not listener.terminated and time.monotonic() < deadline:
+            time.sleep(0.01)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.seen
+    assert set(listener.seen) == {spark.sparkContext.defaultParallelism}
+    assert spark.conf.get(key) == prev
 
 
 def test_foreachbatch_sinks_are_rerun_idempotent(spark, sf_small):
