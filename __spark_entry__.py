@@ -21,7 +21,8 @@ if _REPO not in sys.path:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001: gap-based per-user
+    """Flagship query on the committed sf0.001 fixture
+    (``perfbench/fixtures/sf0.001``, read in place): gap-based per-user
     sessionization joined with per-user inter-arrival stats — the
     composition of B30 and B15 over the events stream."""
     from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from eventstream_benchmark_spark.operators.eventstream import stream_sessionize
     from eventstream_benchmark_spark.operators.relational import win_lag_inter_arrival
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = os.path.join(_REPO, "perfbench", "fixtures", "sf0.001")
     sessions = stream_sessionize(spark, sf_dir)
     arrivals = win_lag_inter_arrival(spark, sf_dir)
     return sessions.join(arrivals, "user_id").orderBy("user_id")

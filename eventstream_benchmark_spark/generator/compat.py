@@ -139,11 +139,14 @@ class EventStream:
     # -- reference cache-key scheme (md5 of the config string,
     #    eventstream.py:249-264), with the mode/shard width appended
     #    because sharded output is a different (still deterministic)
-    #    stream than exact output
+    #    stream than exact output, and a digest of the pattern contents,
+    #    which the reference omits, so pattern sets of one shape never
+    #    share a cached stream
     def _cache_key(self) -> str:
         p, c = self.patterns, self.cfg
+        patterns = hashlib.md5(p.types.tobytes() + p.gaps.tobytes()).hexdigest()
         key = (
-            f"{p.n_patterns}-{p.length}-{c.n_types}-{c.total_events}-"
+            f"{p.n_patterns}-{p.length}-{patterns}-{c.n_types}-{c.total_events}-"
             f"{c.random_ratio}-{c.seed}-{c.pattern_jitter}-"
             f"{c.pattern_jitter_amount}-{c.rand_interval_dist}-"
             f"{c.rand_interval_base}-{c.rand_interval_low}-"

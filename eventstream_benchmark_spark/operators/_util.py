@@ -15,6 +15,9 @@ across engines:
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -43,6 +46,18 @@ def duck_fmt_ts(expr: str) -> str:
 def duck_fmt_date(expr: str) -> str:
     """DuckDB twin of :func:`fmt_date`."""
     return f"strftime({expr}, '{DUCK_DATE_FMT}')"
+
+
+def scratch_path(sf_dir: str, name: str) -> str:
+    """Fixed scratch directory ``$TMPDIR/esb_scratch/<basename(sf_dir)>/
+    <name>`` for queries that materialize files (format round-trips,
+    partitioned layouts, streaming sinks). Writers overwrite or wipe it,
+    so repeated runs reuse disk where a ``mkdtemp`` per call would leak
+    it; fixtures sharing a basename share it."""
+    key = os.path.basename(os.path.normpath(os.path.abspath(sf_dir))) or "sf"
+    p = os.path.join(tempfile.gettempdir(), "esb_scratch", key, name)
+    os.makedirs(p, exist_ok=True)
+    return p
 
 
 def bigint(col: Column) -> Column:

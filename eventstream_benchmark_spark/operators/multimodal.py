@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eventstream_benchmark_spark.io import load_table
-from eventstream_benchmark_spark.operators._util import bigint
+from eventstream_benchmark_spark.operators._util import bigint, scratch_path
 
 # fixture-lake sizing rules (mirrored literally in the DuckDB oracles)
 #   image:  w = n_chars % 56 + 8   (8..63),  h = n_chars*3 % 40 + 8 (8..47)
@@ -482,14 +482,12 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     never transits the driver."""
     import shutil
 
-    from eventstream_benchmark_spark.operators.relational import _scratch_path
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
         .filter(F.col("doc_id") <= BINLAKE_FILES)
     )
-    lake = os.path.join(_scratch_path(sf_dir, "binlake"), "images")
+    lake = os.path.join(scratch_path(sf_dir, "binlake"), "images")
     shutil.rmtree(lake, ignore_errors=True)
     os.makedirs(lake, exist_ok=True)
     for row in docs.collect():  # fixture setup: <= 24 tiny rows

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -34,20 +33,8 @@ from eventstream_benchmark_spark.operators._util import (
     r2,
     r4,
     r6,
+    scratch_path,
 )
-
-def _scratch_path(sf_dir: str, name: str) -> str:
-    """Fixed per-(sf_dir, purpose) scratch directory for queries that
-    must materialize intermediate files (CSV/JSONL/ORC round-trips,
-    partitioned layouts, the DPP fixture).  A fresh ``mkdtemp`` per
-    invocation leaks one orphaned directory per call — bench.py runs
-    each query several times per round — so every writer instead lands
-    on this stable path with ``mode("overwrite")``, making repeated
-    runs reuse (not accumulate) disk."""
-    key = os.path.basename(os.path.normpath(os.path.abspath(sf_dir))) or "sf"
-    p = os.path.join(tempfile.gettempdir(), "esb_scratch", key, name)
-    os.makedirs(p, exist_ok=True)
-    return p
 
 
 # --------------------------------------------------------------------------
@@ -82,7 +69,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the check proves the round-trip is lossless.
     """
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out = os.path.join(_scratch_path(sf_dir, "csv"), "events_csv")
+    out = os.path.join(scratch_path(sf_dir, "csv"), "events_csv")
     events.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema("event_id bigint, event_type string, value double").option(
         "header", True
@@ -126,7 +113,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.concat_ws(",", eid, F.lit("purchase"), qv))
     )
-    out = os.path.join(_scratch_path(sf_dir, "dirty"), "dirty_csv")
+    out = os.path.join(scratch_path(sf_dir, "dirty"), "dirty_csv")
     ev.select(line.alias("value")).write.mode("overwrite").text(out)
     back = (
         spark.read.schema("event_id bigint, event_type string, value double, _corrupt string")
@@ -155,7 +142,7 @@ def scan_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "props"
     )
-    out = os.path.join(_scratch_path(sf_dir, "jsonl"), "events_jsonl")
+    out = os.path.join(scratch_path(sf_dir, "jsonl"), "events_jsonl")
     events.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "event_id bigint, event_type string, value double, props string"
@@ -1839,7 +1826,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    out = os.path.join(_scratch_path(sf_dir, "xml"), "events_xml")
+    out = os.path.join(scratch_path(sf_dir, "xml"), "events_xml")
     (
         events.write.mode("overwrite")
         .format("xml")
@@ -1867,7 +1854,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    out = os.path.join(_scratch_path(sf_dir, "orc"), "events_orc")
+    out = os.path.join(scratch_path(sf_dir, "orc"), "events_orc")
     events.write.mode("overwrite").orc(out)
     back = spark.read.schema("event_id bigint, event_type string, value double").orc(
         out
@@ -1893,7 +1880,7 @@ def write_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    out = os.path.join(_scratch_path(sf_dir, "part"), "events_by_type")
+    out = os.path.join(scratch_path(sf_dir, "part"), "events_by_type")
     events.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type").isin(*PRUNED_TYPES))
     return (
@@ -2039,7 +2026,7 @@ def export_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("run", run)
         .drop("bs")
     )
-    out = os.path.join(_scratch_path(sf_dir, "sorted"), "events_sorted")
+    out = os.path.join(scratch_path(sf_dir, "sorted"), "events_sorted")
     (
         assigned.repartition("run")
         .sortWithinPartitions("k", "event_id")
@@ -2322,7 +2309,7 @@ def join_dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.year("o_orderdate").alias("o_year"),
     )
-    tmp = _scratch_path(sf_dir, "dpp")
+    tmp = scratch_path(sf_dir, "dpp")
     fact_path = os.path.join(tmp, "orders_by_year")
     dim_path = os.path.join(tmp, "year_dim")
     base.write.mode("overwrite").partitionBy("o_year").parquet(fact_path)
@@ -2449,7 +2436,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-generation aggregate from the source table."""
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit(EVOLUTION_CUTOFF).cast("timestamp")
-    root = _scratch_path(sf_dir, "evo")
+    root = scratch_path(sf_dir, "evo")
     gen1 = orders.filter(F.col("o_orderdate") < cutoff).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )

@@ -1,38 +1,26 @@
-"""Structured Streaming surface (B36-B37) + session-window operator.
+"""Structured Streaming pack: the reference's online consumer loop
+(``main.py:44-46``, ``eventstream.py:429-432``) as a file-source replay
+of the events fixture with event-time windows, watermarks and state
+(SURVEY §3 EP3).
 
-The reference's consumption model is a pull-based, one-event-at-a-time
-online loop (``main.py:44-46``, ``eventstream.py:429-432``); the Spark
-re-expression is a file-source ``readStream`` replay with event-time
-windows and watermarks (SURVEY §3 EP3). Three entries:
-
-- ``streaming_replay_tumbling`` (B36): replay the events fixture
-  through a real ``readStream`` → watermark → tumbling-window count →
-  memory sink (``availableNow`` trigger). Complete output mode means
-  every window is emitted, so the result equals the batch aggregation
-  and carries a full DuckDB oracle — a hash-checked streaming query.
-- ``streaming_pattern_state`` (B37): per-user stateful pattern-progress
-  tracking (view→click→purchase) via ``applyInPandasWithState`` — the
-  online sequence-learning loop shape. Rows-only.
-- ``streaming_rate_replay``: the ``rate-micro-batch`` source pacing a
-  broadcast stream-static join over the events fixture — the replay
-  cadence comes from the source, not a file backlog; id-bounded, so
-  hash-checked against a batch oracle.
-- ``session_window_agg``: the ``F.session_window`` operator (batch
-  evaluation of the same operator Structured Streaming uses), 30-min
-  gap sessions per user, with an exact lag-algebra oracle. New session
-  opens when the gap is ≥ the duration (Spark's window is half-open
-  ``[ts, ts+gap)``).
-
-Late-data drop semantics are exercised in ``tests/test_streaming.py``
-(the fixture stream is in-order, like the reference — §1.2 — so
-lateness is injected synthetically there).
+Every replay is ``io.stream_events``: the fixture read in place with
+``load_table``'s schema and timestamp normalization, so each streaming
+query answers what its batch twin does and carries a DuckDB oracle
+(``streaming_pattern_state``'s is a recursive CTE; ``tests/
+test_streaming.py`` also replays it offline). Aggregates land in memory
+sinks whose views are dropped once read; the two ``foreachBatch``
+queries write into a wiped scratch directory; ``streaming_rate_replay``
+is paced by the ``rate-micro-batch`` source instead of a file backlog;
+``session_window_agg`` is the batch twin of the streaming session
+windows. The fixture stream is in order, like the reference (§1.2), so
+late-data drops are tested on synthetic lateness in
+``tests/test_streaming.py``.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
+import shutil
 import time
 import uuid
 from contextlib import contextmanager
@@ -43,8 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eventstream_benchmark_spark.io import load_table
-from eventstream_benchmark_spark.operators._util import bigint, money_sum
+from eventstream_benchmark_spark.io import load_table, stream_events
+from eventstream_benchmark_spark.operators._util import bigint, money_sum, scratch_path
 
 SESSION_GAP = "30 minutes"
 PATTERN_SEQ = ("view", "click", "purchase")
@@ -73,38 +61,13 @@ def _state_shuffle(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the events fixture as a µs-timestamp parquet dir that
-    a vanilla ``readStream`` can consume (the raw fixture is
-    TIMESTAMP(NANOS), unreadable without a legacy conf). Keyed on the
-    fixture's resolved path + mtime so regenerated fixtures (or two
-    roots sharing a basename) never serve stale replay data."""
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    key = hashlib.md5(f"{src}:{os.stat(src).st_mtime_ns}".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"esb_replay_{key}")
-    done = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(done):
-        load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(path)
-    return path
-
-
 def _fresh_sink(sf_dir: str, name: str) -> str:
-    """Fixed per-(fixture, query) sink root, WIPED on every invocation.
-    Streaming sinks must start empty — the rollup bootstraps on sink
-    existence and a stale checkpoint would no-op the replay — but a
-    uuid-suffixed dir per call leaks one sink + checkpoint pair per run
-    (bench.py invokes each query several times per round).  One stable
-    path, cleared up front, keeps every run fresh AND disk bounded.
-
-    The key is basename(sf_dir), so two fixtures sharing a basename or
-    two concurrent processes on the same fixture would share (and wipe)
-    each other's sink + checkpoint — acceptable for the single-process
-    bench/driver contract; add a pid or lock suffix here if concurrent
-    runs ever matter."""
-    import shutil
-
-    key = os.path.basename(os.path.normpath(os.path.abspath(sf_dir))) or "sf"
-    root = os.path.join(tempfile.gettempdir(), "esb_scratch", key, name)
+    """The query's fixed scratch sink (``scratch_path``), wiped with its
+    checkpoint on every invocation. Streaming sinks must start empty —
+    the rollup bootstraps on sink existence and a stale checkpoint would
+    no-op the replay — and one stable path keeps disk bounded across
+    runs."""
+    root = scratch_path(sf_dir, name)
     for p in (root, root + "_ckpt"):
         shutil.rmtree(p, ignore_errors=True)
     return root
@@ -112,7 +75,8 @@ def _fresh_sink(sf_dir: str, name: str) -> str:
 
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink; return the sink table."""
+    memory sink; return the sink's rows. The frame keeps reading them
+    after the sink's view is dropped, so the session keeps no table."""
     name = f"esb_sink_{uuid.uuid4().hex[:8]}"
     query = (
         stream_df.writeStream.format("memory")
@@ -123,7 +87,23 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     )
     query.awaitTermination()
     spark = stream_df.sparkSession
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
+
+
+def _run_to_files(stream_df: DataFrame, out: str, write_batch) -> DataFrame:
+    """Execute a streaming DataFrame to completion (availableNow)
+    through the ``foreachBatch`` function ``write_batch``, which writes
+    parquet into ``out``; checkpoint next to it. Return what landed."""
+    query = (
+        stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", out + "_ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return stream_df.sparkSession.read.parquet(out)
 
 
 def streaming_replay_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,10 +114,7 @@ def streaming_replay_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream is in-order; nothing is late against the 1-hour watermark).
     """
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         windowed = (
             events.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -163,6 +140,17 @@ def _in_event_order(pdf_iter, column: str) -> list:
     pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     order = np.lexsort((pdf["event_id"].to_numpy(), pdf["ts"].to_numpy()))
     return pdf[column].to_numpy()[order].tolist()
+
+
+def _final_state(result: DataFrame, *columns: str) -> DataFrame:
+    """One row per user, ``user_id, *columns, n_events``, from an
+    update-mode sink that appends one row per (user, batch): the row
+    with the most events is the final state, so the output does not
+    depend on how the replay was batched."""
+    latest = result.groupBy("user_id").agg(F.max(F.struct("n_events", *columns)).alias("s"))
+    return latest.select(
+        "user_id", *(F.col(f"s.{c}").alias(c) for c in (*columns, "n_events"))
+    ).orderBy("user_id")
 
 
 def streaming_pattern_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,10 +191,7 @@ def streaming_pattern_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         tracked = events.groupBy("user_id").applyInPandasWithState(
             track,
             outputStructType="user_id long, progress int, completed int, n_events long",
@@ -215,15 +200,7 @@ def streaming_pattern_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         result = _run_to_memory(tracked, "update")
-    # update-mode memory sink appends one row per (user, batch); keep the
-    # final (max n_events) row per user so output is batching-invariant
-    latest = result.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "progress", "completed")).alias("s")
-    )
-    return latest.select(
-        "user_id", F.col("s.progress").alias("progress"),
-        F.col("s.completed").alias("completed"), F.col("s.n_events").alias("n_events")
-    ).orderBy("user_id")
+    return _final_state(result, "progress", "completed")
 
 
 def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,10 +226,7 @@ def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pd.DataFrame({"user_id": [key[0]], "ewma": [y], "n_events": [n]})
 
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         folded = (
             events.filter(F.col("value").isNotNull())
             .groupBy("user_id")
@@ -265,12 +239,23 @@ def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         result = _run_to_memory(folded, "update")
-    latest = result.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "ewma")).alias("s")
+    return _final_state(result, "ewma")
+
+
+def _join_side(spark: SparkSession, sf_dir: str, event_type: str, prefix: str) -> DataFrame:
+    """One side of the click→purchase stream-stream joins: its own replay
+    of one event type under a 2-hour watermark, columns prefixed with
+    ``prefix``."""
+    return (
+        stream_events(spark, sf_dir)
+        .filter(F.col("event_type") == event_type)
+        .withWatermark("ts", "2 hours")
+        .select(
+            F.col("user_id").alias(f"{prefix}_user"),
+            F.col("event_id").alias(f"{prefix}_id"),
+            F.col("ts").alias(f"{prefix}_ts"),
+        )
     )
-    return latest.select(
-        "user_id", F.col("s.ewma").alias("ewma"), F.col("s.n_events").alias("n_events")
-    ).orderBy("user_id")
 
 
 def streaming_join_clicks_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,25 +269,8 @@ def streaming_join_clicks_purchases(spark: SparkSession, sf_dir: str) -> DataFra
     DuckDB oracle. Pairs land in a memory sink; the compact per-user
     aggregate is computed on the sink table after termination."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        schema = load_table(spark, sf_dir, "events").schema
-
-        def side(event_type: str, prefix: str):
-            return (
-                spark.readStream.schema(schema).parquet(src)
-                .filter(F.col("event_type") == event_type)
-                .withWatermark("ts", "2 hours")
-                .select(
-                    F.col("user_id").alias(f"{prefix}_user"),
-                    F.col("event_id").alias(f"{prefix}_id"),
-                    F.col("ts").alias(f"{prefix}_ts"),
-                )
-            )
-
-        clicks = side("click", "c")
-        purchases = side("purchase", "p")
-        pairs = clicks.join(
-            purchases,
+        pairs = _join_side(spark, sf_dir, "click", "c").join(
+            _join_side(spark, sf_dir, "purchase", "p"),
             F.expr(
                 "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"
             ),
@@ -330,23 +298,8 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     only count clicks before a cutoff safely below max_ts − 3 h, where
     outer emission is guaranteed complete."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        schema = load_table(spark, sf_dir, "events").schema
-
-        def side(event_type: str, prefix: str):
-            return (
-                spark.readStream.schema(schema).parquet(src)
-                .filter(F.col("event_type") == event_type)
-                .withWatermark("ts", "2 hours")
-                .select(
-                    F.col("user_id").alias(f"{prefix}_user"),
-                    F.col("event_id").alias(f"{prefix}_id"),
-                    F.col("ts").alias(f"{prefix}_ts"),
-                )
-            )
-
-        pairs = side("click", "c").join(
-            side("purchase", "p"),
+        pairs = _join_side(spark, sf_dir, "click", "c").join(
+            _join_side(spark, sf_dir, "purchase", "p"),
             F.expr(
                 "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"
             ),
@@ -428,9 +381,10 @@ def streaming_rate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 time.sleep(0.3)
         finally:
             query.stop()
+    sunk = spark.table(name)
+    spark.catalog.dropTempView(name)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        sunk.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
             F.min("event_id").alias("min_id"),
@@ -456,11 +410,8 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source table, so the driver hash-checks that no row was lost or
     duplicated across the micro-batch boundary."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
         out = _fresh_sink(sf_dir, "fb")
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         slim = events.filter(
             F.col("event_type").isin(*FOREACH_BATCH_TYPES)
         ).select("event_id", "event_type", "value")
@@ -472,14 +423,7 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "batch_id"
             ).parquet(out)
 
-        query = (
-            slim.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", out + "_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        back = spark.read.parquet(out)
+        back = _run_to_files(slim, out, write_batch)
     return (
         back.groupBy("event_type")
         .agg(
@@ -509,11 +453,8 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash-checks the maintained table, not a weaker row count.
     Sums are exact integer micro-units per the determinism rule."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
         out = _fresh_sink(sf_dir, "roll")
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         v4 = F.round(F.col("value") * 10000, 0).cast("bigint")
         slim = events.filter(F.col("value").isNotNull()).select(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd-HH").alias("hour"),
@@ -541,14 +482,7 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("hour").parquet(out)
 
-        query = (
-            slim.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", out + "_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        rollup = spark.read.parquet(out)
+        rollup = _run_to_files(slim, out, merge_batch)
     return rollup.select(
         "hour",
         "event_type",
@@ -557,6 +491,20 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("s4") * F.lit(1.0) / F.col("n"), 0) / F.lit(10000.0)
         ).alias("avg_value"),
     ).orderBy("hour", "event_type")
+
+
+def _per_user_sessions(sessions: DataFrame) -> DataFrame:
+    """Per-user session count, events and mean session length from one
+    ``(sw, user_id, n_events)`` row per session."""
+    return (
+        sessions.groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_sessions"),
+            F.sum("n_events").alias("n_events"),
+            F.round(F.avg("n_events"), 6).alias("avg_session_events"),
+        )
+        .orderBy("user_id")
+    )
 
 
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,25 +518,14 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale: one open session per (user, gap) kept only until the
     watermark closes it."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         sessions = (
             events.withWatermark("ts", "90 days")
             .groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
             .agg(F.count("*").alias("n_events"))
         )
         result = _run_to_memory(sessions, "complete")
-    return (
-        result.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-            F.round(F.avg("n_events"), 6).alias("avg_session_events"),
-        )
-        .orderBy("user_id")
-    )
+    return _per_user_sessions(result)
 
 
 def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,15 +538,7 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    return (
-        sessions.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-            F.round(F.avg("n_events"), 6).alias("avg_session_events"),
-        )
-        .orderBy("user_id")
-    )
+    return _per_user_sessions(sessions)
 
 
 def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -621,10 +550,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted per-type counts are key counts, so they are deterministic
     regardless of which duplicate instance survived."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         deduped = (
             events.withWatermark("ts", "90 days")
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -646,10 +572,7 @@ def streaming_growth_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark on purpose: the registered-user set IS unbounded state —
     one row per user, the smallest state that answers the question.)"""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
-        events = spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        ).parquet(src)
+        events = stream_events(spark, sf_dir)
         firsts = events.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
         result = _run_to_memory(firsts, "complete")
     daily = result.groupBy(
@@ -680,7 +603,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; if it outgrew broadcast the same plan degrades to a
     shuffled equi-join per micro-batch, still stateless."""
     with _state_shuffle(spark):
-        src = _replay_dir(spark, sf_dir)
         ev = load_table(spark, sf_dir, "events")
         counts = ev.groupBy("user_id").agg(F.count("*").alias("n_events"))
         mean_n = counts.agg(F.avg("n_events").alias("mean_n"))
@@ -690,8 +612,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("light"))
             .alias("tier"),
         )
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        enriched = stream.join(F.broadcast(profile), "user_id")
+        enriched = stream_events(spark, sf_dir).join(F.broadcast(profile), "user_id")
         agg = enriched.groupBy("event_type", "tier").agg(
             F.count("*").alias("n"), money_sum(F.col("value")).alias("sum_value")
         )

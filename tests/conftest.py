@@ -9,18 +9,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-SF_SMALL = "/root/testdata/sf0.001"
-SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+# the committed seed-42 fixtures, read in place (tests write nothing there)
+FIXTURES = os.path.join(REPO, "perfbench", "fixtures")
+SF_SMALL = os.path.join(FIXTURES, "sf0.001")
+SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", os.path.join(FIXTURES, "sf0.01"))
 
 
 @pytest.fixture(scope="session")
 def spark():
     from eventstream_benchmark_spark.session import get_spark
 
-    # get_spark's 16g default lets the suite's JVM grow to ~14 GB of
-    # resident garbage on a 16 GB host, where the kernel may kill it
-    # mid-suite; a 6g heap keeps it well inside physical memory
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     spark = get_spark("esb-tests")
     yield spark
     # enforce the scoped-persist contract (_cache.py): nothing a query

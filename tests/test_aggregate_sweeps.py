@@ -27,6 +27,7 @@ with the decision boundaries PLANTED:
 
 from __future__ import annotations
 
+import os
 import random
 
 import duckdb
@@ -254,7 +255,7 @@ def test_kmv_bottom_k_merge_theorem(spark):
     assert [r.h for r in merged] == direct
 
 
-@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_ORACLE])
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_ORACLE], ids=os.path.basename)
 def test_topk_tie_gap_invariant(sf_dir):
     """``agg_approx_topk_contract``'s oracle hardcodes TRUE for
     in_sketch. That is only guaranteed when the 5th exact count

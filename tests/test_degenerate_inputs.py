@@ -35,9 +35,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_SMALL
 from tests.oracle_harness import check_query
 
-_SRC = "/root/testdata/sf0.001"
 # distinct basename: scratch-dir-writing queries key on it
 _DEGEN = "/tmp/esb_degenerate/sfdegen"
 
@@ -56,7 +56,7 @@ def _build() -> str:
     # tables the harness registers but these queries barely touch:
     # copy the real sf0.001 files
     for t in ("region", "nation", "customer", "supplier", "part", "orders"):
-        shutil.copy(os.path.join(_SRC, f"{t}.parquet"),
+        shutil.copy(os.path.join(SF_SMALL, f"{t}.parquet"),
                     os.path.join(_DEGEN, f"{t}.parquet"))
 
     # events: ONE user, ONE microsecond, ONE hour — every per-type

@@ -614,6 +614,23 @@ def test_compat_sharded_df(spark, tmp_path):
     assert es.to_numpy().shape == (8_000, 3)
 
 
+@pytest.mark.parametrize("mode", ["exact", "sharded"])
+def test_compat_cache_key_covers_pattern_contents(spark, tmp_path, mode):
+    """Two pattern sets of one shape sharing a ``cache_dir`` must not
+    share a cached stream: exact mode through the npz cache, sharded
+    mode through the parquet ``df`` cache."""
+    from eventstream_benchmark_spark.generator import compat
+
+    pats = [compat.generate_patterns(n_patterns=4, pattern_length=5, n_types=4, seed=s)
+            for s in (1, 2)]
+    kw = dict(n_types=4, total_events=500, random_ratio=0.5, seed=7, mode=mode)
+    if mode == "sharded":
+        kw.update(spark=spark, n_shards=8)
+    cached = [compat.EventStream(p, cache_dir=str(tmp_path), **kw).to_numpy() for p in pats]
+    np.testing.assert_array_equal(cached[1], compat.EventStream(pats[1], **kw).to_numpy())
+    assert not np.array_equal(cached[0], cached[1])
+
+
 def test_compat_exact_to_csv_single_file_even_with_spark(spark, tmp_path):
     """Round-4 advice: with a session attached, exact-mode to_csv must
     still produce the reference's single CSV FILE at ``path`` — not a

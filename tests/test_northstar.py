@@ -4,6 +4,8 @@ byte-plumbing equivalence against plain NumPy."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -21,6 +23,7 @@ from eventstream_benchmark_spark.operators.similarity import (
     ann_ivf_cosine,
     knn_bruteforce_topk,
 )
+from tests.conftest import FIXTURES
 
 
 def test_ivf_recall_vs_bruteforce(spark, sf_small):
@@ -166,7 +169,12 @@ def test_simhash_xxhash64_matches_scalar_recomputation(spark, sf_small):
 
 
 @pytest.mark.parametrize(
-    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+    "sf_dir",
+    [
+        pytest.param(os.path.join(FIXTURES, "sf0.001"), id="sf0.001"),
+        pytest.param(os.path.join(FIXTURES, "sf0.01"), id="sf0.01"),
+        "/root/testdata/sf0.1",
+    ],
 )
 def test_embedding_lsh_zero_missed_pairs_per_fixture(spark, sf_dir):
     """Round-4 advice: the 40x4-band hyperplane LSH's theoretical miss

@@ -1,9 +1,9 @@
 """Every declared oracle must hash-match its Spark query locally —
 the same contract the driver enforces (row count + schema + values).
 
-Runs at sf0.001 by default for speed; set
-``SPARK_GRAFT_ORACLE_SF_DIR=/root/testdata/sf0.01`` to replicate the
-driver's exact scale.
+Runs on the committed sf0.01 fixture (``perfbench/fixtures/sf0.01``)
+by default; ``SPARK_GRAFT_ORACLE_SF_DIR`` points it at another fixture
+set, for example ``perfbench/fixtures/sf0.001`` for a fast pass.
 """
 
 from __future__ import annotations

@@ -13,17 +13,18 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
-from eventstream_benchmark_spark.io import load_table
+from eventstream_benchmark_spark.io import load_table, stream_events
 from eventstream_benchmark_spark.streaming.queries import (
     PATTERN_SEQ,
     _in_event_order,
+    _run_to_files,
+    _run_to_memory,
     streaming_pattern_state,
     streaming_replay_tumbling,
 )
@@ -80,13 +81,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name).select(F.col("w.start").alias("ws"), "n").toPandas()
+    out = _run_to_memory(stream, "append").select(F.col("w.start").alias("ws"), "n").toPandas()
     hour1 = out[out["ws"] == pd.Timestamp("2024-01-01 01:00:00")]
     # 3 on-time rows in hour 1; the late 01:07 row must NOT be counted
     assert not hour1.empty
@@ -97,10 +92,6 @@ def test_foreachbatch_sink_parquet(spark, sf_small, tmp_path):
     """B36's foreachBatch surface: replay the events fixture through a
     stream and land each micro-batch in a parquet sink via custom
     batch logic; total landed rows equal the source row count."""
-    from eventstream_benchmark_spark.streaming.queries import _replay_dir
-
-    src = _replay_dir(spark, sf_small)
-    schema = load_table(spark, sf_small, "events").schema
     out = str(tmp_path / "landed")
 
     def land(batch_df, batch_id: int):
@@ -110,16 +101,7 @@ def test_foreachbatch_sink_parquet(spark, sf_small, tmp_path):
             .parquet(out)
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(src)
-        .writeStream.foreachBatch(land)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    landed = spark.read.parquet(out)
+    landed = _run_to_files(stream_events(spark, sf_small), out, land)
     assert landed.count() == load_table(spark, sf_small, "events").count()
     assert "batch_id" in landed.columns
 
@@ -230,19 +212,53 @@ def test_stateful_batches_run_one_wave(spark, sf_small):
     assert spark.conf.get(key) == prev
 
 
+def _run_twice(spark, sf_dir: str, name: str) -> list[pd.DataFrame]:
+    """Two back-to-back runs of streaming query ``name``, each sorted
+    on every column."""
+    from eventstream_benchmark_spark.streaming import queries as sq
+
+    runs = []
+    for _ in range(2):
+        pdf = sq.QUERIES[name](spark, sf_dir).toPandas()
+        cols = sorted(pdf.columns)
+        runs.append(pdf.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True))
+    return runs
+
+
 def test_foreachbatch_sinks_are_rerun_idempotent(spark, sf_small):
     """The fixed per-fixture sink root (`_fresh_sink`) is WIPED on every
     invocation, so back-to-back runs must produce identical results —
     a stale checkpoint would no-op the second replay and a stale sink
     would double-count (bench.py and the driver both invoke each query
     more than once per round)."""
-    from eventstream_benchmark_spark.streaming import queries as sq
-
     for name in ("streaming_foreach_batch_sink", "streaming_incremental_rollup"):
-        fn = sq.QUERIES[name]
-        first = fn(spark, sf_small).toPandas()
-        second = fn(spark, sf_small).toPandas()
-        cols = sorted(first.columns)
-        a = first.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True)
-        b = second.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True)
+        a, b = _run_twice(spark, sf_small, name)
         assert a.equals(b), f"{name}: rerun diverged"
+
+
+def test_memory_sinks_leave_no_views(spark, sf_small):
+    """Each memory-sink query drops its sink's view once the result
+    frame is bound: two runs of each leave no ``esb_sink_*`` or
+    ``esb_rate_*`` table in the session and return equal rows."""
+    for name in ("streaming_replay_tumbling", "streaming_pattern_state",
+                 "streaming_rate_replay"):
+        a, b = _run_twice(spark, sf_small, name)
+        assert len(a) > 0
+        pd.testing.assert_frame_equal(a, b)
+    left = [t.name for t in spark.catalog.listTables()
+            if t.name.startswith(("esb_sink_", "esb_rate_"))]
+    assert left == []
+
+
+def test_stream_events_reads_fixture_in_place(spark, sf_small, tmp_path):
+    """The replay reads the committed single-file table and a
+    Spark-written ``events.parquet/`` directory alike, with
+    ``load_table``'s schema and rows, and writes nothing to the fixture."""
+    before = sorted(os.listdir(sf_small))
+    batch = load_table(spark, sf_small, "events")
+    batch.repartition(3).write.parquet(str(tmp_path / "events.parquet"))
+    for sf_dir in (sf_small, str(tmp_path)):
+        got = _run_to_memory(stream_events(spark, sf_dir), "append")
+        assert got.schema == batch.schema
+        assert got.exceptAll(batch).isEmpty() and batch.exceptAll(got).isEmpty()
+    assert sorted(os.listdir(sf_small)) == before
