@@ -44,10 +44,10 @@ def shard_rng(seed: int, shard: int) -> np.random.Generator:
     return np.random.default_rng(np.random.SeedSequence(entropy=int(seed), spawn_key=(int(shard),)))
 
 
-def jittered(base: int, dist: str, amount: int, rng: np.random.Generator, floor: int = 1) -> int:
-    """Symmetric integer jitter, clamped ≥ floor (ref ``eventstream.py:31-60``)."""
+def jittered(base: int, dist: str, amount: int, rng: np.random.Generator) -> int:
+    """Symmetric integer jitter, clamped ≥ 1 (ref ``eventstream.py:31-60``)."""
     if dist == "none" or amount <= 0:
-        return max(floor, int(base))
+        return max(1, int(base))
     if dist == "uniform":
         delta = rng.integers(-amount, amount + 1)
     elif dist == "gaussian":
@@ -56,7 +56,7 @@ def jittered(base: int, dist: str, amount: int, rng: np.random.Generator, floor:
         delta = int(np.round(rng.laplace(0.0, amount)))
     else:
         raise ValueError(f"unknown jitter dist {dist!r}")
-    return max(floor, int(base + delta))
+    return max(1, int(base + delta))
 
 
 def interval(base: int, dist: str, rng: np.random.Generator,
@@ -85,10 +85,10 @@ def rate_at(t: int, mode: str, base_rate: float, period: int, amp: float) -> flo
     raise ValueError(f"unknown density mode {mode!r}")
 
 
-def build_patterns(cfg: PatternConfig, rng: np.random.Generator | None = None) -> tuple[np.ndarray, np.ndarray]:
+def build_patterns(cfg: PatternConfig) -> tuple[np.ndarray, np.ndarray]:
     """Pattern matrices (types[n,L] int32, gaps[n,L-1] int32)
     (ref ``eventstream.py:140-183``)."""
-    rng = rng if rng is not None else make_rng(cfg.seed)
+    rng = make_rng(cfg.seed)
     types = rng.integers(0, cfg.n_types, size=(cfg.n_patterns, cfg.pattern_length), dtype=np.int32)
     gaps = np.empty((cfg.n_patterns, cfg.pattern_length - 1), dtype=np.int32)
     for row in range(cfg.n_patterns):
@@ -252,10 +252,10 @@ def _vector_intervals(cfg: StreamConfig, rng: np.random.Generator, n: int) -> np
 
 
 def _vector_jitter(base: np.ndarray, dist: str, amount: int,
-                   rng: np.random.Generator, floor: int = 1) -> np.ndarray:
+                   rng: np.random.Generator) -> np.ndarray:
     """Vectorized :func:`jittered` (same laws and clamp)."""
     if dist == "none" or amount <= 0:
-        return np.maximum(floor, base)
+        return np.maximum(1, base)
     if dist == "uniform":
         delta = rng.integers(-amount, amount + 1, base.shape)
     elif dist == "gaussian":
@@ -264,7 +264,7 @@ def _vector_jitter(base: np.ndarray, dist: str, amount: int,
         delta = np.round(rng.laplace(0.0, amount, base.shape)).astype(np.int64)
     else:
         raise ValueError(f"unknown jitter dist {dist!r}")
-    return np.maximum(floor, base + delta)
+    return np.maximum(1, base + delta)
 
 
 def build_stream_fast(

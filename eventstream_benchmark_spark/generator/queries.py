@@ -72,6 +72,32 @@ PUREDF_JITTER_STREAM = dataclasses.replace(
 )
 
 
+def _shard_summary(df: DataFrame, checksums: bool) -> DataFrame:
+    """One row per shard: event count, integer pattern-event count and
+    time span, plus ts/type sums (``checksums``) so a hash of the
+    summary covers every generated value."""
+    from eventstream_benchmark_spark.operators._util import bigint
+
+    sums = (
+        [
+            bigint(F.sum("ts")).alias("sum_ts"),
+            bigint(F.sum(F.col("event_type").cast("long"))).alias("sum_types"),
+        ]
+        if checksums
+        else []
+    )
+    return (
+        df.groupBy("shard")
+        .agg(
+            F.count("*").alias("n_events"),
+            bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
+            F.max("ts").alias("span_ticks"),
+            *sums,
+        )
+        .orderBy("shard")
+    )
+
+
 def generate_patterns_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B33 — the pattern set as scalar rows (A5/A6).
 
@@ -124,18 +150,8 @@ def generate_stream_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw integer count (not a rounded fraction) so the constant
     can't drift on a rounding-mode mismatch between engines (Spark
     HALF_UP vs Python banker's rounding at .0005 ties)."""
-    from eventstream_benchmark_spark.operators._util import bigint
-
     df = spark_gen.stream_df_sharded(spark, GOLDEN_PATTERNS, SCALE_STREAM, SCALE_SHARDS)
-    return (
-        df.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_events"),
-            bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
-            F.max("ts").alias("span_ticks"),
-        )
-        .orderBy("shard")
-    )
+    return _shard_summary(df, checksums=False)
 
 
 def generate_stream_dataframe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,20 +167,8 @@ def generate_stream_dataframe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-keyed draws), so the oracle is the precomputed
     ``_PUREDF_SUMMARY_ROWS`` constant, pinned against a fresh run by
     ``tests/test_generator.py``."""
-    from eventstream_benchmark_spark.operators._util import bigint
-
     df = spark_gen.stream_df_pure(spark, GOLDEN_PATTERNS, PUREDF_STREAM, SCALE_SHARDS)
-    return (
-        df.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_events"),
-            bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
-            F.max("ts").alias("span_ticks"),
-            bigint(F.sum("ts")).alias("sum_ts"),
-            bigint(F.sum(F.col("event_type").cast("long"))).alias("sum_types"),
-        )
-        .orderBy("shard")
-    )
+    return _shard_summary(df, checksums=True)
 
 
 def generate_stream_dataframe_jittered(
@@ -179,22 +183,10 @@ def generate_stream_dataframe_jittered(
     per-shard checksum summary; deterministic (hash-keyed draws), so
     the oracle is the precomputed ``_PUREDF_JITTER_SUMMARY_ROWS``
     constant, pinned against a fresh run by ``tests/test_generator.py``."""
-    from eventstream_benchmark_spark.operators._util import bigint
-
     df = spark_gen.stream_df_pure(
         spark, GOLDEN_PATTERNS, PUREDF_JITTER_STREAM, SCALE_SHARDS
     )
-    return (
-        df.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_events"),
-            bigint(F.sum(F.col("is_pattern").cast("long"))).alias("n_pattern"),
-            F.max("ts").alias("span_ticks"),
-            bigint(F.sum("ts")).alias("sum_ts"),
-            bigint(F.sum(F.col("event_type").cast("long"))).alias("sum_types"),
-        )
-        .orderBy("shard")
-    )
+    return _shard_summary(df, checksums=True)
 
 
 def udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,15 +246,16 @@ def udtf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield s, cnt // s
 
     spark.udtf.register("scale_buckets", ScaleBuckets)
-    load_table(spark, sf_dir, "events").groupBy("event_type").agg(
+    counts = load_table(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count("*").alias("cnt")
-    ).createOrReplaceTempView("type_counts_for_udtf")
+    )
     return spark.sql(
         """
         SELECT event_type, s.scale, s.scaled
-        FROM type_counts_for_udtf, LATERAL scale_buckets(cnt) s
+        FROM {counts}, LATERAL scale_buckets(cnt) s
         ORDER BY event_type, scale
-        """
+        """,
+        counts=counts,
     )
 
 
@@ -530,32 +523,32 @@ _PUREDF_JITTER_SUMMARY_ROWS = (
     (31, 10000, 3000, 58899, 293634919, 25155),
 )
 
+def _values_oracle(columns: str, rows: tuple[tuple, ...], order_by: str) -> str:
+    """DuckDB SQL returning the constant ``rows``: one ``CAST(cN AS T)
+    AS name`` per ``"name T"`` entry of the comma-separated
+    ``columns``, over a VALUES relation (``None`` is ``NULL``)."""
+    cols = [c.split() for c in columns.split(", ")]
+    return (
+        "SELECT "
+        + ", ".join(f"CAST(c{i} AS {t}) AS {n}" for i, (n, t) in enumerate(cols))
+        + " FROM (VALUES "
+        + ", ".join(
+            "(" + ", ".join("NULL" if v is None else str(v) for v in row) + ")"
+            for row in rows
+        )
+        + f") v({', '.join(f'c{i}' for i in range(len(cols)))}) ORDER BY {order_by}"
+    )
+
+
+_SHARD_SUMMARY = "shard INTEGER, n_events BIGINT, n_pattern BIGINT, span_ticks BIGINT"
+_CHECKSUMS = _SHARD_SUMMARY + ", sum_ts BIGINT, sum_types BIGINT"
+
 ORACLES: dict[str, str] = {
-    "generate_stream_dataframe": (
-        "SELECT CAST(c0 AS INTEGER) AS shard,"
-        " CAST(c1 AS BIGINT) AS n_events,"
-        " CAST(c2 AS BIGINT) AS n_pattern,"
-        " CAST(c3 AS BIGINT) AS span_ticks,"
-        " CAST(c4 AS BIGINT) AS sum_ts,"
-        " CAST(c5 AS BIGINT) AS sum_types FROM (VALUES "
-        + ", ".join(
-            f"({s}, {n}, {p}, {sp}, {st}, {ty})"
-            for s, n, p, sp, st, ty in _PUREDF_SUMMARY_ROWS
-        )
-        + ") v(c0, c1, c2, c3, c4, c5) ORDER BY shard"
+    "generate_stream_dataframe": _values_oracle(
+        _CHECKSUMS, _PUREDF_SUMMARY_ROWS, "shard"
     ),
-    "generate_stream_dataframe_jittered": (
-        "SELECT CAST(c0 AS INTEGER) AS shard,"
-        " CAST(c1 AS BIGINT) AS n_events,"
-        " CAST(c2 AS BIGINT) AS n_pattern,"
-        " CAST(c3 AS BIGINT) AS span_ticks,"
-        " CAST(c4 AS BIGINT) AS sum_ts,"
-        " CAST(c5 AS BIGINT) AS sum_types FROM (VALUES "
-        + ", ".join(
-            f"({s}, {n}, {p}, {sp}, {st}, {ty})"
-            for s, n, p, sp, st, ty in _PUREDF_JITTER_SUMMARY_ROWS
-        )
-        + ") v(c0, c1, c2, c3, c4, c5) ORDER BY shard"
+    "generate_stream_dataframe_jittered": _values_oracle(
+        _CHECKSUMS, _PUREDF_JITTER_SUMMARY_ROWS, "shard"
     ),
     "pattern_recovery_scored": (
         "SELECT CAST({} AS BIGINT) AS n_matches,"
@@ -591,31 +584,18 @@ ORACLES: dict[str, str] = {
           ON p.user_id = c.user_id AND p.ts >= c.click_ts
         GROUP BY p.user_id ORDER BY p.user_id
     """,
-    "generate_stream_exact": (
-        "SELECT CAST(c0 AS INTEGER) AS event_type,"
-        " CAST(c1 AS BOOLEAN) AS is_pattern, CAST(c2 AS BIGINT) AS n,"
-        " CAST(c3 AS BIGINT) AS min_ts, CAST(c4 AS BIGINT) AS max_ts,"
-        " CAST(c5 AS BIGINT) AS sum_ts FROM (VALUES "
-        + ", ".join(f"({t}, {p}, {n}, {lo}, {hi}, {s})"
-                    for t, p, n, lo, hi, s in _EXACT_SUMMARY_ROWS)
-        + ") v(c0, c1, c2, c3, c4, c5) ORDER BY event_type, is_pattern"
+    "generate_stream_exact": _values_oracle(
+        "event_type INTEGER, is_pattern BOOLEAN, n BIGINT, min_ts BIGINT,"
+        " max_ts BIGINT, sum_ts BIGINT",
+        _EXACT_SUMMARY_ROWS,
+        "event_type, is_pattern",
     ),
-    "generate_patterns_spark": (
-        "SELECT CAST(c0 AS INTEGER) AS pattern_id,"
-        " CAST(c1 AS INTEGER) AS pos, CAST(c2 AS INTEGER) AS event_type,"
-        " CAST(c3 AS INTEGER) AS gap FROM (VALUES "
-        + ", ".join(
-            f"({pid}, {pos}, {et}, {'NULL' if gap is None else gap})"
-            for pid, pos, et, gap in _PATTERN_ROWS
-        )
-        + ") v(c0, c1, c2, c3) ORDER BY pattern_id, pos"
+    "generate_patterns_spark": _values_oracle(
+        "pattern_id INTEGER, pos INTEGER, event_type INTEGER, gap INTEGER",
+        _PATTERN_ROWS,
+        "pattern_id, pos",
     ),
-    "generate_stream_sharded": (
-        "SELECT CAST(c0 AS INTEGER) AS shard,"
-        " CAST(c1 AS BIGINT) AS n_events,"
-        " CAST(c2 AS BIGINT) AS n_pattern,"
-        " CAST(c3 AS BIGINT) AS span_ticks FROM (VALUES "
-        + ", ".join(f"({s}, {n}, {f}, {t})" for s, n, f, t in _SHARDED_SUMMARY_ROWS)
-        + ") v(c0, c1, c2, c3) ORDER BY shard"
+    "generate_stream_sharded": _values_oracle(
+        _SHARD_SUMMARY, _SHARDED_SUMMARY_ROWS, "shard"
     ),
 }

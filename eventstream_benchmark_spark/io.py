@@ -6,17 +6,26 @@ tables, one parquet file per table in one directory (the seed-42
 FIXTURES.md).
 Parquet scans give Catalyst predicate pushdown + column pruning for
 free, so every query starts from ``load_table`` and stays declarative.
+
+SQL-shaped queries write each table as a ``{table}`` placeholder:
+``fixture_sql`` binds every placeholder to its ``load_table`` frame for
+one statement, and ``bare_sql`` spells the same text with bare table
+names for the DuckDB oracle, whose fixture views carry those names.
+Nothing is registered in the session catalog.
 """
 
 from __future__ import annotations
 
 import os
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "load_table", "stream_events", "register_views", "default_sf_dir"]
+__all__ = [
+    "TABLES", "load_table", "stream_events", "fixture_sql", "bare_sql", "default_sf_dir",
+]
 
 TABLES = (
     "region",
@@ -138,7 +147,21 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalized(spark.readStream.schema(schema).parquet(path[:-1] + "[t]"), "events")
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each fixture table as a temp view for spark.sql queries."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def _placeholders(text: str) -> tuple[str, ...]:
+    """The ``{name}`` fields of ``text``, each once, in order."""
+    return tuple(dict.fromkeys(f for _, f, _, _ in string.Formatter().parse(text) if f))
+
+
+def fixture_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run ``text`` on Spark with each ``{table}`` placeholder bound to
+    that fixture table of ``sf_dir`` (``load_table``). Spark binds the
+    frames under generated view names for this one statement and drops
+    them once it is analyzed, so no view outlives the call and two
+    callers on one session never see each other's fixtures."""
+    return spark.sql(text, **{n: load_table(spark, sf_dir, n) for n in _placeholders(text)})
+
+
+def bare_sql(text: str) -> str:
+    """``text`` with each ``{table}`` placeholder written as the bare
+    table name: the spelling the DuckDB oracle runs."""
+    return text.format_map({n: n for n in _placeholders(text)})

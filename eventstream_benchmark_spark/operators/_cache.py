@@ -20,13 +20,16 @@ recompute — so releasing a previous query's cache is always safe.
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from eventstream_benchmark_spark.session import share_package_path
+
 _LIVE: list[DataFrame] = []
 
-# (family, app_id, sf_dir) -> persisted DataFrame shared ACROSS queries
+# shared_key(...) -> persisted DataFrame shared ACROSS queries
 # of one family within a sweep (the graph family's co-purchase edge
 # build is the motivating case: four queries each paid the same
 # distinct + per-order self-join).  Deliberately NOT released by
@@ -52,26 +55,38 @@ def released_at_entry(
     query: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
     """Wrap a registry query so it releases the previous query's scoped
-    persists before it runs."""
+    persists before it runs, and so its Python workers can import this
+    package (``session.share_package_path``)."""
 
     @functools.wraps(query)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_scoped_persists()
+        share_package_path(spark)
         return query(spark, sf_dir)
 
     return run
 
 
-def shared_persist(key: tuple, builder: Callable[[], DataFrame]) -> DataFrame:
-    """Return the family-shared persisted DataFrame for ``key``,
-    building it on first use. The key must include the Spark
-    applicationId (a cached frame is useless to a later session) and
-    the fixture directory (two fixtures must never share a build).
+def shared_key(spark: SparkSession, sf_dir: str, *tags) -> tuple:
+    """The shared-registry key ``(*tags, applicationId, abspath(sf_dir))``.
+    The first tag names the family (``release_shared_families`` matches
+    it); the application id keeps a cached frame from serving a later
+    session, and the fixture path keeps two fixtures from sharing a
+    build."""
+    return (*tags, spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+
+
+def shared_persist(
+    spark: SparkSession, sf_dir: str, family: str, builder: Callable[[], DataFrame]
+) -> DataFrame:
+    """Return the persisted DataFrame ``family`` shares for this
+    session and fixture (:func:`shared_key`), building it on first use.
 
     If an external actor unpersisted the entry (e.g. a harness calling
     ``spark.catalog.clearCache()``), re-persist it — the frame stays
     valid either way (Spark recomputes lazily); re-persisting just
     restores the amortization."""
+    key = shared_key(spark, sf_dir, family)
     return shared_persist_atomic((key,), lambda: (builder(),))[0]
 
 

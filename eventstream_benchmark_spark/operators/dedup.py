@@ -30,8 +30,6 @@ buckets (the measured sf1 585 s → 10.7 s lesson).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +38,7 @@ from pyspark.sql import functions as F
 from eventstream_benchmark_spark.io import load_table
 from eventstream_benchmark_spark.operators._cache import (
     scoped_persist,
+    shared_key,
     shared_persist,
     shared_persist_atomic,
 )
@@ -451,11 +450,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering/eval/pruning stages; the persist is output-sized
     (pairs, not corpus)."""
     return shared_persist(
-        (
-            "minhash_pairs",
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-        ),
+        spark, sf_dir, "minhash_pairs",
         lambda: _minhash_pairs_collapsed(spark, sf_dir),
     )
 
@@ -566,8 +561,6 @@ def _collapse_family(
     previous per-key builders silently rebuilt BOTH frames on a
     half-evicted cache and left the surviving twin on the old
     ``groups`` persist, doubling its storage."""
-    key_base = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-
     def _build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         keyed = docs.select(F.lower("text").alias("ltext"), "doc_id")
@@ -596,8 +589,8 @@ def _collapse_family(
 
     return shared_persist_atomic(
         (
-            ("minhash_rep_pairs", *key_base),
-            ("minhash_membership", *key_base),
+            shared_key(spark, sf_dir, "minhash_rep_pairs"),
+            shared_key(spark, sf_dir, "minhash_membership"),
         ),
         _build,
     )
@@ -1086,11 +1079,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture): ``dedup_semantic_recall_eval`` consumes the identical
     frame as its flat all-pairs truth side."""
     return shared_persist(
-        (
-            "emb_cosine_pairs",
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-        ),
+        spark, sf_dir, "emb_cosine_pairs",
         lambda: _emb_cosine_pairs_build(spark, sf_dir),
     )
 
@@ -1236,11 +1225,7 @@ def _cc_labels_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expansion applies to within-pairs): their label is the rep_id
     itself."""
     return shared_persist(
-        (
-            "cc_labels",
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-        ),
+        spark, sf_dir, "cc_labels",
         lambda: _cc_labels_build(spark, sf_dir),
     )
 

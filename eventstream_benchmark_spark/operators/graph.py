@@ -33,8 +33,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,11 +85,7 @@ def _edge_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist is fact-scale storage at worst — the same trade
     `RangePartitioner`-style pipelines make for any reused edge set."""
     return shared_persist(
-        (
-            "copurchase_pairs",
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-        ),
+        spark, sf_dir, "copurchase_pairs",
         lambda: _copurchase_edges(load_table(spark, sf_dir, "lineitem")),
     )
 
@@ -129,11 +123,7 @@ def _edge_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
         return un.repartition("src")
 
     return shared_persist(
-        (
-            "copurchase_undirected",
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-        ),
+        spark, sf_dir, "copurchase_undirected",
         build,
     )
 

@@ -20,7 +20,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from eventstream_benchmark_spark.io import load_table
+from eventstream_benchmark_spark.io import bare_sql, fixture_sql, load_table
 from eventstream_benchmark_spark.operators._cache import scoped_persist
 from eventstream_benchmark_spark.operators._util import (
     bigint,
@@ -881,9 +881,9 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_TOPN_SQL = """
     SELECT r.r_name, t.c_name, t.c_acctbal
-    FROM region r JOIN LATERAL (
+    FROM {region} r JOIN LATERAL (
         SELECT c.c_name, c.c_acctbal
-        FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+        FROM {customer} c JOIN {nation} n ON c.c_nationkey = n.n_nationkey
         WHERE n.n_regionkey = r.r_regionkey
         ORDER BY c.c_acctbal DESC, c.c_custkey LIMIT 2
     ) t ON TRUE
@@ -903,10 +903,7 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant while keeping the user-facing lateral syntax. Identical
     SQL text runs on DuckDB; no arithmetic touches c_acctbal, so the
     doubles compare exactly."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("region", "nation", "customer"))
-    return spark.sql(_LATERAL_TOPN_SQL)
+    return fixture_sql(spark, sf_dir, _LATERAL_TOPN_SQL)
 
 
 def agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1140,30 +1137,45 @@ def agg_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select("event_type", "n_users_exact", within.alias("within_5pct"))
 
 
+_TPCH_Q3 = """
+    SELECT l_orderkey,
+           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(CAST(o_orderdate AS DATE) AS STRING) AS orderdate,
+           o_orderpriority
+    FROM {customer} JOIN {orders} ON c_custkey = o_custkey
+    JOIN {lineitem} ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1998-01-01'
+      AND l_shipdate > TIMESTAMP '1998-01-01'
+    GROUP BY l_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, o_orderdate, l_orderkey
+    LIMIT 10
+"""
+
+
 def sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 (shipping-priority shape) through the SQL entry point:
-    views registered, query planned by spark.sql — proving the engine's
-    SQL surface produces the same plans/results as the DataFrame API
-    (Catalyst unifies both)."""
-    from eventstream_benchmark_spark.io import register_views
+    fixture frames bound, query planned by spark.sql — proving the
+    engine's SQL surface produces the same plans/results as the
+    DataFrame API (Catalyst unifies both)."""
+    return fixture_sql(spark, sf_dir, _TPCH_Q3)
 
-    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
-    return spark.sql(
-        """
-        SELECT l_orderkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate,
-               o_orderpriority
-        FROM customer JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < timestamp '1998-01-01'
-          AND l_shipdate > timestamp '1998-01-01'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderdate, l_orderkey
-        LIMIT 10
-        """
-    )
+
+_TPCH_Q5 = """
+    SELECT n_name,
+           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    FROM {customer}
+    JOIN {orders} ON c_custkey = o_custkey
+    JOIN {lineitem} ON l_orderkey = o_orderkey
+    JOIN {supplier} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN {nation} ON s_nationkey = n_nationkey
+    JOIN {region} ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= timestamp '1996-01-01'
+      AND o_orderdate < timestamp '1998-01-01'
+    GROUP BY n_name
+    ORDER BY revenue DESC, n_name
+"""
 
 
 def sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1173,29 +1185,21 @@ def sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     The c_nationkey = s_nationkey condition makes the join graph cyclic
     — a shape Catalyst's join reordering has to handle, which is why the
     classic benchmark includes it."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q5)
 
-    register_views(
-        spark, sf_dir,
-        ("customer", "orders", "lineitem", "supplier", "nation", "region"),
-    )
-    return spark.sql(
-        """
-        SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= timestamp '1996-01-01'
-          AND o_orderdate < timestamp '1998-01-01'
-        GROUP BY n_name
-        ORDER BY revenue DESC, n_name
-        """
-    )
+
+_TPCH_Q4 = """
+    SELECT o_orderpriority, count(*) AS order_count
+    FROM {orders}
+    WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+      AND o_orderdate < TIMESTAMP '1997-04-01'
+      AND EXISTS (
+          SELECT 1 FROM {lineitem}
+          WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
+      )
+    GROUP BY o_orderpriority
+    ORDER BY o_orderpriority
+"""
 
 
 def sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,23 +1209,21 @@ def sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates). The correlated EXISTS plans as a left-semi join — Catalyst
     never materializes the subquery per row — and the lineitem side of
     the semi-join carries only l_orderkey + the pushed date filter."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q4)
 
-    register_views(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(
-        """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= timestamp '1997-01-01'
-          AND o_orderdate < timestamp '1997-04-01'
-          AND EXISTS (
-              SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
-          )
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
-        """
-    )
+
+_TPCH_Q12 = """
+    SELECT l_linestatus,
+           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+    FROM {orders} JOIN {lineitem} ON o_orderkey = l_orderkey
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate < TIMESTAMP '1998-01-01'
+    GROUP BY l_linestatus
+    ORDER BY l_linestatus
+"""
 
 
 def sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,23 +1231,23 @@ def sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_shipmode, so the classification pivots on o_orderpriority and
     groups by l_linestatus). One fact⋈fact equi-join plus conditional
     sums — the CASE folds into the aggregate, no second pass."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q12)
 
-    register_views(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(
-        """
-        SELECT l_linestatus,
-               sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                        THEN 1 ELSE 0 END) AS high_line_count,
-               sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                        THEN 1 ELSE 0 END) AS low_line_count
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE l_shipdate >= timestamp '1997-01-01'
-          AND l_shipdate < timestamp '1998-01-01'
-        GROUP BY l_linestatus
-        ORDER BY l_linestatus
-        """
-    )
+
+_TPCH_Q14 = """
+    SELECT CAST(CAST(date_trunc('month', l_shipdate) AS DATE) AS STRING)
+               AS month,
+           round(100.0 * sum(CASE WHEN p_type = 'PROMO'
+                                  THEN l_extendedprice * (1 - l_discount)
+                                  ELSE 0.0 END)
+                 / sum(l_extendedprice * (1 - l_discount)), 4)
+               AS promo_revenue_pct
+    FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate < TIMESTAMP '1998-01-01'
+    GROUP BY 1
+    ORDER BY 1
+"""
 
 
 def sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,25 +1255,18 @@ def sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     from PROMO parts. The part dim broadcasts; the ratio of two
     conditional sums happens once per group after the single shuffled
     aggregate."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q14)
 
-    register_views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(
-        """
-        SELECT date_format(date_trunc('month', l_shipdate), 'yyyy-MM-dd')
-                   AS month,
-               round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                                      THEN l_extendedprice * (1 - l_discount)
-                                      ELSE 0.0 END)
-                     / sum(l_extendedprice * (1 - l_discount)), 4)
-                   AS promo_revenue_pct
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE l_shipdate >= timestamp '1997-01-01'
-          AND l_shipdate < timestamp '1998-01-01'
-        GROUP BY 1
-        ORDER BY 1
-        """
-    )
+
+_TPCH_Q6 = """
+    SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
+           count(*) AS n_lines
+    FROM {lineitem}
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate < TIMESTAMP '1998-01-01'
+      AND l_discount BETWEEN 0.05 AND 0.07
+      AND l_quantity < 24
+"""
 
 
 def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1280,20 +1275,24 @@ def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregate merge. All three predicates push to the parquet
     scan, so at 100 TB this reads only the four referenced columns of
     the row groups whose min/max stats overlap the filters."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q6)
 
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(
-        """
-        SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-               count(*) AS n_lines
-        FROM lineitem
-        WHERE l_shipdate >= timestamp '1997-01-01'
-          AND l_shipdate < timestamp '1998-01-01'
-          AND l_discount BETWEEN 0.05 AND 0.07
-          AND l_quantity < 24
-        """
-    )
+
+_TPCH_Q10 = """
+    SELECT c_custkey, c_name,
+           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           round(c_acctbal, 2) AS acctbal, n_name
+    FROM {customer}
+    JOIN {orders} ON c_custkey = o_custkey
+    JOIN {lineitem} ON l_orderkey = o_orderkey
+    JOIN {nation} ON c_nationkey = n_nationkey
+    WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+      AND o_orderdate < TIMESTAMP '1997-07-01'
+      AND l_returnflag = 'R'
+    GROUP BY c_custkey, c_name, c_acctbal, n_name
+    ORDER BY revenue DESC, c_custkey
+    LIMIT 20
+"""
 
 
 def sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,26 +1301,25 @@ def sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nation dim broadcast; the group key includes all customer
     attributes so the aggregate collapses to one row per customer, then
     TakeOrderedAndProject keeps the top 20 without a global sort."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q10)
 
-    register_views(spark, sf_dir, ("customer", "orders", "lineitem", "nation"))
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               round(c_acctbal, 2) AS acctbal, n_name
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN nation ON c_nationkey = n_nationkey
-        WHERE o_orderdate >= timestamp '1997-01-01'
-          AND o_orderdate < timestamp '1997-07-01'
-          AND l_returnflag = 'R'
-        GROUP BY c_custkey, c_name, c_acctbal, n_name
-        ORDER BY revenue DESC, c_custkey
-        LIMIT 20
-        """
+
+_TPCH_Q18 = """
+    SELECT c_name, c_custkey, o_orderkey,
+           CAST(CAST(o_orderdate AS DATE) AS STRING) AS orderdate,
+           round(o_totalprice, 2) AS totalprice,
+           round(sum(l_quantity), 2) AS sum_qty
+    FROM {customer}
+    JOIN {orders} ON c_custkey = o_custkey
+    JOIN {lineitem} ON o_orderkey = l_orderkey
+    WHERE o_orderkey IN (
+        SELECT l_orderkey FROM {lineitem}
+        GROUP BY l_orderkey HAVING sum(l_quantity) > 250
     )
+    GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 20
+"""
 
 
 def sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1331,27 +1329,20 @@ def sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — tiny after the >250 filter — drives a semi-join that prunes
     orders/customer/lineitem before the outer aggregate; Catalyst
     plans the IN as a left-semi hash join, never a per-row subquery."""
-    from eventstream_benchmark_spark.io import register_views
+    return fixture_sql(spark, sf_dir, _TPCH_Q18)
 
-    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
-    return spark.sql(
-        """
-        SELECT c_name, c_custkey, o_orderkey,
-               date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate,
-               round(o_totalprice, 2) AS totalprice,
-               round(sum(l_quantity), 2) AS sum_qty
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE o_orderkey IN (
-            SELECT l_orderkey FROM lineitem
-            GROUP BY l_orderkey HAVING sum(l_quantity) > 250
-        )
-        GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-        ORDER BY o_totalprice DESC, o_orderkey
-        LIMIT 20
-        """
-    )
+
+_TPCH_Q19 = """
+    SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           count(*) AS n_lines
+    FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
+    WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+           AND l_quantity BETWEEN 1 AND 11)
+       OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+           AND l_quantity BETWEEN 10 AND 20)
+       OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
+           AND l_quantity BETWEEN 20 AND 30)
+"""
 
 
 def sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,22 +1353,7 @@ def sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_partkey equi-key — this stays a hash join with the residual
     disjunction as post-join filter, NOT a nested-loop join — and
     derives a p_brand IN (...) pushdown for the part scan."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(
-        """
-        SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n_lines
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-               AND l_quantity BETWEEN 1 AND 11)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-               AND l_quantity BETWEEN 10 AND 20)
-           OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-               AND l_quantity BETWEEN 20 AND 30)
-        """
-    )
+    return fixture_sql(spark, sf_dir, _TPCH_Q19)
 
 
 _TPCH_Q7 = """
@@ -1388,12 +1364,12 @@ _TPCH_Q7 = """
                CAST(year(l_shipdate) AS INTEGER) AS l_year,
                CAST(round((l_extendedprice * (1 - l_discount)) * 10000)
                     AS BIGINT) AS volume_e4
-        FROM supplier
-        JOIN lineitem ON s_suppkey = l_suppkey
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN customer ON c_custkey = o_custkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        FROM {supplier}
+        JOIN {lineitem} ON s_suppkey = l_suppkey
+        JOIN {orders} ON o_orderkey = l_orderkey
+        JOIN {customer} ON c_custkey = o_custkey
+        JOIN {nation} n1 ON s_nationkey = n1.n_nationkey
+        JOIN {nation} n2 ON c_nationkey = n2.n_nationkey
         WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
             OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
           AND l_shipdate >= TIMESTAMP '1995-01-01'
@@ -1415,16 +1391,11 @@ def sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-decimal money value, so the scaled integer is exact): integer
     sums are partition-order-independent, and the output rounds at 4
     decimals — the sum's own scale — so no rounding boundary sits
-    within 500x of the representation error on either engine
-    (round-4 advice; a 2-decimal round would land exactly ON the
-    half-cent boundary whenever the sum ends in .xx50, where Spark's
-    shortest-decimal rounding and DuckDB's binary rounding disagree)."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(
-        spark, sf_dir, ("supplier", "lineitem", "orders", "customer", "nation")
-    )
-    return spark.sql(_TPCH_Q7)
+    within 500x of the representation error on either engine (a
+    2-decimal round would land exactly ON the half-cent boundary
+    whenever the sum ends in .xx50, where Spark's shortest-decimal
+    rounding and DuckDB's binary rounding disagree)."""
+    return fixture_sql(spark, sf_dir, _TPCH_Q7)
 
 
 _TPCH_Q8 = """
@@ -1435,14 +1406,14 @@ _TPCH_Q8 = """
         SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
                l_extendedprice * (1 - l_discount) AS volume,
                n2.n_name AS nation
-        FROM part
-        JOIN lineitem ON p_partkey = l_partkey
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        JOIN region ON n1.n_regionkey = r_regionkey
-        JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        FROM {part}
+        JOIN {lineitem} ON p_partkey = l_partkey
+        JOIN {supplier} ON s_suppkey = l_suppkey
+        JOIN {orders} ON l_orderkey = o_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        JOIN {nation} n1 ON c_nationkey = n1.n_nationkey
+        JOIN {region} ON n1.n_regionkey = r_regionkey
+        JOIN {nation} n2 ON s_nationkey = n2.n_nationkey
         WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
           AND o_orderdate >= TIMESTAMP '1995-01-01'
           AND o_orderdate < TIMESTAMP '1997-01-01'
@@ -1459,13 +1430,7 @@ def sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution) — the longest join chain in the engine; every dim
     broadcasts, the two fact tables shuffle once each on their join
     keys."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(
-        spark, sf_dir,
-        ("part", "lineitem", "supplier", "orders", "customer", "nation", "region"),
-    )
-    return spark.sql(_TPCH_Q8)
+    return fixture_sql(spark, sf_dir, _TPCH_Q8)
 
 
 _TPCH_Q9 = """
@@ -1476,11 +1441,11 @@ _TPCH_Q9 = """
                CAST(round((l_extendedprice * (1 - l_discount)
                    - 0.06 * l_quantity * p_retailprice) * 10000)
                     AS BIGINT) AS amount_e4
-        FROM part
-        JOIN lineitem ON p_partkey = l_partkey
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN nation ON s_nationkey = n_nationkey
+        FROM {part}
+        JOIN {lineitem} ON p_partkey = l_partkey
+        JOIN {supplier} ON s_suppkey = l_suppkey
+        JOIN {orders} ON o_orderkey = l_orderkey
+        JOIN {nation} ON s_nationkey = n_nationkey
         WHERE p_name LIKE '%red%'
     ) profit
     GROUP BY nation, o_year
@@ -1496,20 +1461,15 @@ def sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; profit aggregates per supplier nation × order year.
     Profit sums 1e-4-scaled BIGINTs so the 2-decimal rounding is
     summation-order-proof across engines (see sql_tpch_q7)."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(
-        spark, sf_dir, ("part", "lineitem", "supplier", "orders", "nation")
-    )
-    return spark.sql(_TPCH_Q9)
+    return fixture_sql(spark, sf_dir, _TPCH_Q9)
 
 
 _TPCH_Q13 = """
     SELECT c_count, count(*) AS custdist
     FROM (
         SELECT c_custkey, count(o_orderkey) AS c_count
-        FROM customer
-        LEFT JOIN orders ON c_custkey = o_custkey
+        FROM {customer}
+        LEFT JOIN {orders} ON c_custkey = o_custkey
              AND o_orderpriority <> '1-URGENT'
         GROUP BY c_custkey
     ) c_orders
@@ -1524,23 +1484,20 @@ def sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     clause (not WHERE — null-extended customers must survive with
     count 0). Two aggregations: per-customer, then the distribution;
     the second groupBy's key space is tiny so it collapses map-side."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_TPCH_Q13)
+    return fixture_sql(spark, sf_dir, _TPCH_Q13)
 
 
 _TPCH_Q15 = """
     WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
           AND l_shipdate < TIMESTAMP '1996-04-01'
         GROUP BY l_suppkey
     )
     SELECT s_suppkey, s_name, total_revenue
-    FROM supplier JOIN revenue ON s_suppkey = supplier_no
+    FROM {supplier} JOIN revenue ON s_suppkey = supplier_no
     WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
     ORDER BY s_suppkey
 """
@@ -1552,20 +1509,17 @@ def sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery. Revenue is rounded BEFORE the max comparison so both
     engines elect the same winner even if their double summation
     orders differ in the last bit."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("supplier", "lineitem"))
-    return spark.sql(_TPCH_Q15)
+    return fixture_sql(spark, sf_dir, _TPCH_Q15)
 
 
 _TPCH_Q17 = """
     SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
            count(*) AS n_small_lines
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
+    FROM {lineitem}
+    JOIN {part} ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#2' AND p_size < 5
       AND l_quantity < (
-          SELECT 0.2 * avg(l_quantity) FROM lineitem l2
+          SELECT 0.2 * avg(l_quantity) FROM {lineitem} l2
           WHERE l2.l_partkey = p_partkey
       )
 """
@@ -1578,27 +1532,24 @@ def sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare is float-safe cross-engine: quantities are whole numbers,
     so their sums (and hence 0.2·avg) are exact doubles in any
     summation order."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_TPCH_Q17)
+    return fixture_sql(spark, sf_dir, _TPCH_Q17)
 
 
 _TPCH_Q21 = """
     SELECT s_name, count(*) AS numwait
-    FROM supplier
-    JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-    JOIN orders ON o_orderkey = l1.l_orderkey
-    JOIN nation ON s_nationkey = n_nationkey
+    FROM {supplier}
+    JOIN {lineitem} l1 ON s_suppkey = l1.l_suppkey
+    JOIN {orders} ON o_orderkey = l1.l_orderkey
+    JOIN {nation} ON s_nationkey = n_nationkey
     WHERE o_orderstatus = 'F' AND l1.l_returnflag = 'R'
       AND n_name = 'NATION_5'
       AND EXISTS (
-          SELECT 1 FROM lineitem l2
+          SELECT 1 FROM {lineitem} l2
           WHERE l2.l_orderkey = l1.l_orderkey
             AND l2.l_suppkey <> l1.l_suppkey
       )
       AND NOT EXISTS (
-          SELECT 1 FROM lineitem l3
+          SELECT 1 FROM {lineitem} l3
           WHERE l3.l_orderkey = l1.l_orderkey
             AND l3.l_suppkey <> l1.l_suppkey
             AND l3.l_returnflag = 'R'
@@ -1617,10 +1568,7 @@ def sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NOT EXISTS as a left-anti hash join on l_orderkey; the fact
     table is visited three times but shuffles on the same key each
     time."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("supplier", "lineitem", "orders", "nation"))
-    return spark.sql(_TPCH_Q21)
+    return fixture_sql(spark, sf_dir, _TPCH_Q21)
 
 
 _TPCH_Q22 = """
@@ -1628,12 +1576,12 @@ _TPCH_Q22 = """
            round(sum(c_acctbal), 2) AS totacctbal
     FROM (
         SELECT CAST(c_nationkey % 5 AS INTEGER) AS cntrycode, c_acctbal
-        FROM customer
+        FROM {customer}
         WHERE c_acctbal > (
-            SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0
+            SELECT avg(c_acctbal) FROM {customer} WHERE c_acctbal > 0.0
         )
         AND NOT EXISTS (
-            SELECT 1 FROM orders
+            SELECT 1 FROM {orders}
             WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
         )
     ) custsale
@@ -1650,17 +1598,14 @@ def sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q22's three-part structure: uncorrelated scalar average, anti-
     join, and the bucketed rollup.
 
-    Residual cross-engine risk (documented per round-4 advice, like
-    q17/q20): rows are SELECTED by comparing against a double scalar
-    average whose summation order differs between engines; a balance
-    landing within ~1 ulp of the average could flip membership. No
-    fixture value sits near the boundary (driver-green r4); unlike a
-    rounded output column this can't be integer-scaled away without
-    changing the query's declared semantics."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_TPCH_Q22)
+    Residual cross-engine risk (like q17/q20): rows are SELECTED by
+    comparing against a double scalar average whose summation order
+    differs between engines; a balance landing within ~1 ulp of the
+    average could flip membership. No fixture value sits near the
+    boundary; unlike a rounded output column this can't be
+    integer-scaled away without changing the query's declared
+    semantics."""
+    return fixture_sql(spark, sf_dir, _TPCH_Q22)
 
 
 # The fixture set ships no partsupp table, so the four queries that
@@ -1677,7 +1622,7 @@ _PARTSUPP_CTE = """
                    AS ps_availqty,
                CAST((p_partkey * 31 + i * 17) % 90000 AS DOUBLE) / 100.0 + 1.0
                    AS ps_supplycost
-        FROM part CROSS JOIN (SELECT count(*) AS n FROM supplier) ns
+        FROM {part} CROSS JOIN (SELECT count(*) AS n FROM {supplier}) ns
         CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(i)
     )
 """
@@ -1686,18 +1631,18 @@ _TPCH_Q2 = f"""
     WITH {_PARTSUPP_CTE}
     SELECT round(s_acctbal, 2) AS acctbal, s_name, n_name, p_partkey,
            p_type, round(ps_supplycost, 2) AS supplycost
-    FROM part
+    FROM {{part}}
     JOIN partsupp ON p_partkey = ps_partkey
-    JOIN supplier ON s_suppkey = ps_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
+    JOIN {{supplier}} ON s_suppkey = ps_suppkey
+    JOIN {{nation}} ON s_nationkey = n_nationkey
+    JOIN {{region}} ON n_regionkey = r_regionkey
     WHERE p_size BETWEEN 10 AND 15 AND p_type = 'LARGE' AND r_name = 'ASIA'
       AND ps_supplycost = (
           SELECT min(ps2.ps_supplycost)
           FROM partsupp ps2
-          JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
-          JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-          JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
+          JOIN {{supplier}} s2 ON s2.s_suppkey = ps2.ps_suppkey
+          JOIN {{nation}} n2 ON s2.s_nationkey = n2.n_nationkey
+          JOIN {{region}} r2 ON n2.n_regionkey = r2.r_regionkey
           WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'ASIA'
       )
     ORDER BY acctbal DESC, n_name, s_name, p_partkey
@@ -1711,25 +1656,22 @@ def sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-part aggregate joined back on (partkey, cost). The cost
     equality compare is exact: supplycost is integer-derived
     (k/100 + 1), so both engines compute the identical double."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("part", "supplier", "nation", "region"))
-    return spark.sql(_TPCH_Q2)
+    return fixture_sql(spark, sf_dir, _TPCH_Q2)
 
 
 _TPCH_Q11 = f"""
     WITH {_PARTSUPP_CTE}
     SELECT ps_partkey, round(sum(ps_supplycost * ps_availqty), 2) AS value
     FROM partsupp
-    JOIN supplier ON ps_suppkey = s_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
+    JOIN {{supplier}} ON ps_suppkey = s_suppkey
+    JOIN {{nation}} ON s_nationkey = n_nationkey
     WHERE n_name = 'NATION_7'
     GROUP BY ps_partkey
     HAVING sum(ps_supplycost * ps_availqty) > (
         SELECT sum(ps_supplycost * ps_availqty) * 0.005
         FROM partsupp
-        JOIN supplier ON ps_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
+        JOIN {{supplier}} ON ps_suppkey = s_suppkey
+        JOIN {{nation}} ON s_nationkey = n_nationkey
         WHERE n_name = 'NATION_7'
     )
     ORDER BY value DESC, ps_partkey
@@ -1742,26 +1684,22 @@ def sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     total — the HAVING threshold is an uncorrelated scalar subquery
     (one extra aggregate, computed once, broadcast into the filter).
 
-    Residual cross-engine risk (documented per round-4 advice, like
-    q17/q20): the HAVING compares a per-part double sum against a
-    double fraction of the grand total; both sums are summation-order
-    dependent, so a part sitting within ~1 ulp of the threshold could
-    flip membership between engines. No fixture part is near the
-    boundary (driver-green r4)."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("part", "supplier", "nation"))
-    return spark.sql(_TPCH_Q11)
+    Residual cross-engine risk (like q17/q20): the HAVING compares a
+    per-part double sum against a double fraction of the grand total;
+    both sums are summation-order dependent, so a part sitting within
+    ~1 ulp of the threshold could flip membership between engines. No
+    fixture part is near the boundary."""
+    return fixture_sql(spark, sf_dir, _TPCH_Q11)
 
 
 _TPCH_Q16 = f"""
     WITH {_PARTSUPP_CTE}
     SELECT p_brand, p_type, p_size,
            count(DISTINCT ps_suppkey) AS supplier_cnt
-    FROM partsupp JOIN part ON p_partkey = ps_partkey
+    FROM partsupp JOIN {{part}} ON p_partkey = ps_partkey
     WHERE p_brand <> 'Brand#3' AND p_size IN (1, 5, 9, 14, 23)
       AND ps_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
+          SELECT s_suppkey FROM {{supplier}} WHERE s_acctbal < 0
       )
     GROUP BY p_brand, p_type, p_size
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
@@ -1773,25 +1711,22 @@ def sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier counts per (brand, type, size) with a NOT IN supplier
     exclusion (negative balance stands in for the complaints filter) —
     the NOT IN plans as a null-aware anti join against a tiny side."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("part", "supplier"))
-    return spark.sql(_TPCH_Q16)
+    return fixture_sql(spark, sf_dir, _TPCH_Q16)
 
 
 _TPCH_Q20 = f"""
     WITH {_PARTSUPP_CTE}
     SELECT s_name, round(s_acctbal, 2) AS acctbal
-    FROM supplier JOIN nation ON s_nationkey = n_nationkey
+    FROM {{supplier}} JOIN {{nation}} ON s_nationkey = n_nationkey
     WHERE n_name = 'NATION_4'
       AND s_suppkey IN (
           SELECT ps_suppkey FROM partsupp
           WHERE ps_partkey IN (
-              SELECT p_partkey FROM part WHERE p_name LIKE 'blue%'
+              SELECT p_partkey FROM {{part}} WHERE p_name LIKE 'blue%'
           )
           AND ps_availqty > (
               SELECT 0.5 * coalesce(sum(l_quantity), 0)
-              FROM lineitem
+              FROM {{lineitem}}
               WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
                 AND l_shipdate >= TIMESTAMP '1996-01-01'
                 AND l_shipdate < TIMESTAMP '1997-01-01'
@@ -1808,10 +1743,7 @@ def sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shipped quantity per (part, supplier)). Catalyst decorrelates to
     an aggregate joined on both keys; the 0.5·sum threshold compare is
     exact because quantities are whole numbers."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("part", "supplier", "nation", "lineitem"))
-    return spark.sql(_TPCH_Q20)
+    return fixture_sql(spark, sf_dir, _TPCH_Q20)
 
 
 def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2505,25 +2437,23 @@ def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CORRELATED_SQL = """
+    SELECT n_name, count(*) AS n_above,
+           round(max(c_acctbal), 2) AS max_bal
+    FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
+    WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM {customer} c2
+                       WHERE c2.c_nationkey = c_nationkey)
+    GROUP BY n_name
+    ORDER BY n_name
+"""
+
+
 def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: customers whose account balance beats
     their nation's average. Catalyst decorrelates this into an aggregate
     + join (no per-row re-execution) — the subquery is planned once over
     the 25-key nation grouping, then broadcast."""
-    from eventstream_benchmark_spark.io import register_views
-
-    register_views(spark, sf_dir, ("customer", "nation"))
-    return spark.sql(
-        """
-        SELECT n_name, count(*) AS n_above,
-               round(max(c_acctbal), 2) AS max_bal
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-        WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
-                           WHERE c2.c_nationkey = c_nationkey)
-        GROUP BY n_name
-        ORDER BY n_name
-        """
-    )
+    return fixture_sql(spark, sf_dir, _CORRELATED_SQL)
 
 
 def scalar_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2607,22 +2537,26 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_GROUPING_SETS_SQL = """
+    SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
+           coalesce(l_linestatus, 'ALL') AS l_linestatus,
+           CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+           count(*) AS n,
+           round(sum(l_extendedprice), 2) AS sum_price
+    FROM {lineitem}
+    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                            (l_linestatus), ())
+"""
+
+
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the general form rollup/cube compile to
     (one shuffle; Spark expands sets via a single Expand node, not one
-    scan per set). grouping_id() disambiguates subtotal rows the same
-    way on both engines."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql("""
-        SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-               coalesce(l_linestatus, 'ALL') AS l_linestatus,
-               CAST(grouping_id() AS BIGINT) AS gid,
-               count(*) AS n,
-               round(sum(l_extendedprice), 2) AS sum_price
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_linestatus), ())
-    """)
+    scan per set). grouping_id over both keys disambiguates subtotal
+    rows, spelled the same on both engines (Spark's ``grouping`` takes
+    one column, DuckDB's ``GROUPING`` several; ``grouping_id(a, b)``
+    means the same bitmask to both)."""
+    return fixture_sql(spark, sf_dir, _GROUPING_SETS_SQL)
 
 
 def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3125,6 +3059,32 @@ QUERIES = {
 }
 
 ORACLES = {
+    # SQL-shaped queries: DuckDB runs the query's own text, with each
+    # {table} placeholder spelled as the bare table name
+    "sql_tpch_q2": bare_sql(_TPCH_Q2),
+    "sql_tpch_q3": bare_sql(_TPCH_Q3),
+    "sql_tpch_q4": bare_sql(_TPCH_Q4),
+    "sql_tpch_q5": bare_sql(_TPCH_Q5),
+    "sql_tpch_q6": bare_sql(_TPCH_Q6),
+    "sql_tpch_q7": bare_sql(_TPCH_Q7),
+    "sql_tpch_q8": bare_sql(_TPCH_Q8),
+    "sql_tpch_q9": bare_sql(_TPCH_Q9),
+    "sql_tpch_q10": bare_sql(_TPCH_Q10),
+    "sql_tpch_q11": bare_sql(_TPCH_Q11),
+    "sql_tpch_q12": bare_sql(_TPCH_Q12),
+    "sql_tpch_q13": bare_sql(_TPCH_Q13),
+    "sql_tpch_q14": bare_sql(_TPCH_Q14),
+    "sql_tpch_q15": bare_sql(_TPCH_Q15),
+    "sql_tpch_q16": bare_sql(_TPCH_Q16),
+    "sql_tpch_q17": bare_sql(_TPCH_Q17),
+    "sql_tpch_q18": bare_sql(_TPCH_Q18),
+    "sql_tpch_q19": bare_sql(_TPCH_Q19),
+    "sql_tpch_q20": bare_sql(_TPCH_Q20),
+    "sql_tpch_q21": bare_sql(_TPCH_Q21),
+    "sql_tpch_q22": bare_sql(_TPCH_Q22),
+    "join_lateral_topn": bare_sql(_LATERAL_TOPN_SQL),
+    "subquery_correlated": bare_sql(_CORRELATED_SQL),
+    "agg_grouping_sets": bare_sql(_GROUPING_SETS_SQL),
     "join_runtime_filtered": """
         SELECT strftime(date_trunc('month', o_orderdate),
                         '%Y-%m-%d %H:%M:%S.%f') AS month,
@@ -3147,21 +3107,6 @@ ORACLES = {
         FROM lineitem
         GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    "sql_tpch_q5": """
-        SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= timestamp '1996-01-01'
-          AND o_orderdate < timestamp '1998-01-01'
-        GROUP BY n_name
-        ORDER BY revenue DESC, n_name
-    """,
     "scalar_conditional": """
         SELECT CASE WHEN l_quantity < 10 THEN 'small'
                     WHEN l_quantity < 30 THEN 'medium'
@@ -3174,25 +3119,6 @@ ORACLES = {
                round(sum(greatest(l_quantity, 5.0)), 2) AS sum_qty_floor5
         FROM lineitem
         GROUP BY 1 ORDER BY 1
-    """,
-    "subquery_correlated": """
-        SELECT n_name, count(*) AS n_above,
-               round(max(c_acctbal), 2) AS max_bal
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-        WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
-                           WHERE c2.c_nationkey = c_nationkey)
-        GROUP BY n_name
-        ORDER BY n_name
-    """,
-    "agg_grouping_sets": """
-        SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-               coalesce(l_linestatus, 'ALL') AS l_linestatus,
-               CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-               count(*) AS n,
-               round(sum(l_extendedprice), 2) AS sum_price
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_linestatus), ())
     """,
     "agg_histogram": f"""
         SELECT CAST(floor(value / {HIST_WIDTH}) * {HIST_WIDTH} AS BIGINT)
@@ -3315,108 +3241,6 @@ ORACLES = {
                coalesce(lag(max_k) OVER (ORDER BY run) < min_k, TRUE) AS disjoint
         FROM st ORDER BY run
     """,
-    "sql_tpch_q4": """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-          AND o_orderdate < TIMESTAMP '1997-04-01'
-          AND EXISTS (
-              SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
-          )
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
-    """,
-    "sql_tpch_q12": """
-        SELECT l_linestatus,
-               CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-               CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                             THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1998-01-01'
-        GROUP BY l_linestatus
-        ORDER BY l_linestatus
-    """,
-    "sql_tpch_q14": """
-        SELECT strftime(date_trunc('month', l_shipdate), '%Y-%m-%d') AS month,
-               round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                                      THEN l_extendedprice * (1 - l_discount)
-                                      ELSE 0.0 END)
-                     / sum(l_extendedprice * (1 - l_discount)), 4)
-                   AS promo_revenue_pct
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1998-01-01'
-        GROUP BY 1
-        ORDER BY 1
-    """,
-    "sql_tpch_q6": """
-        SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-               count(*) AS n_lines
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1998-01-01'
-          AND l_discount BETWEEN 0.05 AND 0.07
-          AND l_quantity < 24
-    """,
-    "sql_tpch_q10": """
-        SELECT c_custkey, c_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               round(c_acctbal, 2) AS acctbal, n_name
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN nation ON c_nationkey = n_nationkey
-        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-          AND o_orderdate < TIMESTAMP '1997-07-01'
-          AND l_returnflag = 'R'
-        GROUP BY c_custkey, c_name, c_acctbal, n_name
-        ORDER BY revenue DESC, c_custkey
-        LIMIT 20
-    """,
-    "sql_tpch_q18": """
-        SELECT c_name, c_custkey, o_orderkey,
-               strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-               round(o_totalprice, 2) AS totalprice,
-               round(sum(l_quantity), 2) AS sum_qty
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE o_orderkey IN (
-            SELECT l_orderkey FROM lineitem
-            GROUP BY l_orderkey HAVING sum(l_quantity) > 250
-        )
-        GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-        ORDER BY o_totalprice DESC, o_orderkey
-        LIMIT 20
-    """,
-    "sql_tpch_q19": """
-        SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n_lines
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-               AND l_quantity BETWEEN 1 AND 11)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-               AND l_quantity BETWEEN 10 AND 20)
-           OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-               AND l_quantity BETWEEN 20 AND 30)
-    """,
-    # q7-q22: Spark and DuckDB run the IDENTICAL SQL text (shared
-    # module constants) — the strongest possible dialect-parity claim
-    "sql_tpch_q7": _TPCH_Q7,
-    "sql_tpch_q8": _TPCH_Q8,
-    "sql_tpch_q9": _TPCH_Q9,
-    "sql_tpch_q13": _TPCH_Q13,
-    "sql_tpch_q15": _TPCH_Q15,
-    "sql_tpch_q17": _TPCH_Q17,
-    "sql_tpch_q21": _TPCH_Q21,
-    "sql_tpch_q22": _TPCH_Q22,
-    "sql_tpch_q2": _TPCH_Q2,
-    "sql_tpch_q11": _TPCH_Q11,
-    "sql_tpch_q16": _TPCH_Q16,
-    "sql_tpch_q20": _TPCH_Q20,
     "agg_percentiles": """
         SELECT l_returnflag,
                round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
@@ -3433,8 +3257,6 @@ ORACLES = {
                TRUE AS within_5pct
         FROM events GROUP BY event_type ORDER BY event_type
     """,
-    # identical lateral SQL text runs on both engines
-    "join_lateral_topn": _LATERAL_TOPN_SQL,
     # same DATE-cast day difference, same capped buckets, exact cents
     "orders_shipping_lag": f"""
         SELECT CAST(least({LAG_BUCKET_CAP},
@@ -3719,20 +3541,6 @@ ORACLES = {
                CAST(round(mdt / (n - 1) * 10000.0, 0) AS BIGINT)
                    AS cov_disc_tax_e4
         FROM m ORDER BY l_linestatus
-    """,
-    "sql_tpch_q3": """
-        SELECT l_orderkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-               o_orderpriority
-        FROM customer JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-01-01'
-          AND l_shipdate > TIMESTAMP '1998-01-01'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderdate, l_orderkey
-        LIMIT 10
     """,
     "agg_pivot": f"""
         SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,

@@ -20,8 +20,6 @@ within buckets.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -37,6 +35,7 @@ TOPK = 20
 KNN_QUERIES = 10
 KNN_K = 5
 LSH_PLANES = 12
+EMB_DIM = 64  # the fixture's embedding width
 
 
 def _as_double(col: str = "embedding"):
@@ -138,13 +137,13 @@ def knn_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _hyperplane(plane: int, dim: int = 64) -> list[float]:
+def _hyperplane(plane: int) -> list[float]:
     """Deterministic pseudo-random unit-free hyperplane: a fixed
     xorshift-style integer sequence mapped to [-0.5, 0.5). Pure python
     at plan-build time (tiny), embedded as literals in the plan."""
     vals = []
     x = (plane * 0x9E3779B97F4A7C15 + 0xD1B54A32D192ED03) & 0xFFFFFFFFFFFFFFFF
-    for _ in range(dim):
+    for _ in range(EMB_DIM):
         x ^= (x << 13) & 0xFFFFFFFFFFFFFFFF
         x ^= x >> 7
         x ^= (x << 17) & 0xFFFFFFFFFFFFFFFF
@@ -419,7 +418,7 @@ def _ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _recompute_centroids(_assign(emb, seed))
 
     return shared_persist(
-        ("ivf_refined", spark.sparkContext.applicationId, os.path.abspath(sf_dir)),
+        spark, sf_dir, "ivf_refined",
         build,
     )
 
@@ -431,7 +430,7 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the fixture's 64-dim doubles ≈ 0.5 KB/row), the same storage
     trade as any materialized IVF index."""
     return shared_persist(
-        ("ivf_assigned", spark.sparkContext.applicationId, os.path.abspath(sf_dir)),
+        spark, sf_dir, "ivf_assigned",
         lambda: _assign(_ivf_emb(spark, sf_dir), _ivf_refined(spark, sf_dir)),
     )
 
@@ -916,7 +915,7 @@ def _semdedup_pairs(spark: SparkSession, sf_dir: str):
         )
 
     pairs = shared_persist(
-        ("semdedup_victims", spark.sparkContext.applicationId, os.path.abspath(sf_dir)),
+        spark, sf_dir, "semdedup_victims",
         build,
     )
     return assigned, pairs

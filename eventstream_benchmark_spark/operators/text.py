@@ -1762,16 +1762,14 @@ def _bpe_family(
     ``bpe_*`` tags before every timed ``corpus_bpe_merge_loop`` pass,
     so the emitter still reports the true build cost and the
     consumers report marginal cost — the minhash_pairs asymmetry."""
-    import os as _os
-
     from eventstream_benchmark_spark.operators._cache import (
+        shared_key,
         shared_persist_atomic,
     )
 
-    key_base = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
     keys = (
-        ("bpe_merges", *key_base),
-        *(("bpe_hist", k, *key_base) for k in range(BPE_MERGE_STEPS + 1)),
+        shared_key(spark, sf_dir, "bpe_merges"),
+        *(shared_key(spark, sf_dir, "bpe_hist", k) for k in range(BPE_MERGE_STEPS + 1)),
     )
 
     def build() -> tuple[DataFrame, ...]:
@@ -2498,16 +2496,10 @@ def index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     releases the ``bm25_topk`` tag before every timed pass of THIS
     query so it still reports the true build cost while the fusion
     consumer reports marginal cost."""
-    import os as _os
-
     from eventstream_benchmark_spark.operators._cache import shared_persist
 
     return shared_persist(
-        (
-            "bm25_topk",
-            spark.sparkContext.applicationId,
-            _os.path.abspath(sf_dir),
-        ),
+        spark, sf_dir, "bm25_topk",
         lambda: _bm25_topk_build(spark, sf_dir),
     )
 

@@ -12,7 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "share_package_path"]
+
+#: the directory that holds this package
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -22,26 +25,24 @@ def _default_driver_memory() -> str:
     return f"{min(16 << 10, total_mb * 2 // 5)}m"
 
 
-def get_spark(app_name: str = "eventstream_benchmark_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "eventstream_benchmark_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
     Defaults chosen for correctness-at-scale:
       - AQE on (runtime partition coalescing, skew-join splitting)
       - UTC session timezone (timestamp parity with the DuckDB oracle)
       - Arrow on (fast toPandas / pandas_udf transfer)
-      - shuffle partitions ~ cores locally; on a real cluster this
+      - shuffle partitions = cores locally; on a real cluster this
         would be sized to 2-3x total executor cores (AQE coalesces).
       - driver heap from ``SPARK_DRIVER_MEMORY``, else about 40 % of
         physical memory (``_default_driver_memory``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -54,3 +55,17 @@ def get_spark(app_name: str = "eventstream_benchmark_spark", shuffle_partitions:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def share_package_path(spark: SparkSession) -> None:
+    """Put the directory holding this package first on the Python
+    workers' path. A worker imports by name every function pickled by
+    reference (module-level helpers of the operator packs), and it
+    starts from the JVM's working directory without the calling
+    process's ``sys.path``; a program that found the package through
+    ``sys.path`` alone would fail in its first such task. The value is read when a
+    Python function is planned, so later queries of the session see it."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])

@@ -8,17 +8,23 @@
 - The family-shared persist registry: one build per (app, fixture)
   key, re-persist after an external clearCache, full release at
   harness boundaries, and one shared build per query family.
+- Registry queries leave the session catalog as they found it, and
+  their Python workers import the package from any working directory.
 """
 
 from __future__ import annotations
 
 import ast
+import inspect
+import os
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 import pyspark.sql.functions as F
 
-from tests.conftest import REPO
+from tests.conftest import REPO, SF_SMALL
 
 
 def test_coverage_doc_tracks_registry():
@@ -74,23 +80,24 @@ def test_shared_persist_lifecycle(spark, sf_small):
     from eventstream_benchmark_spark.operators._cache import (
         _SHARED,
         release_shared_persists,
+        shared_key,
         shared_persist,
     )
 
     builds = []
-    key = ("test_family", spark.sparkContext.applicationId, "fixture")
+    key = shared_key(spark, "fixture", "test_family")
 
     def builder():
         builds.append(1)
         return spark.range(10).withColumn("x", F.col("id") * 2)
 
-    a = shared_persist(key, builder)
-    b = shared_persist(key, builder)
-    assert a is b and len(builds) == 1 and a.is_cached
+    a = shared_persist(spark, "fixture", "test_family", builder)
+    b = shared_persist(spark, "fixture", "test_family", builder)
+    assert a is b and len(builds) == 1 and a.is_cached and key in _SHARED
     # an external clearCache must not leave a silently-unpersisted
     # entry in the registry: the next fetch re-persists (no rebuild)
     spark.catalog.clearCache()
-    c = shared_persist(key, builder)
+    c = shared_persist(spark, "fixture", "test_family", builder)
     assert c is a and len(builds) == 1 and c.is_cached
     release_shared_persists()
     assert key not in _SHARED and not a.is_cached
@@ -155,3 +162,48 @@ def test_embedding_family_shares_ivf_and_pair_builds(spark, sf_small):
     shared = qs["dedup_semantic_recall_eval"](spark, sf_small).collect()
     assert shared == cold
     release_shared_persists()
+
+
+def test_sql_queries_leave_the_catalog_unchanged(spark, sf_small):
+    """Every SQL-shaped registry query binds its tables for its own
+    statement only: running them all leaves the session catalog as it
+    was, so no view named after a fixture table can point at whichever
+    ``sf_dir`` ran last. A fresh session of the same context starts
+    with an empty catalog of its own."""
+    from eventstream_benchmark_spark.operators import all_queries
+
+    queries = all_queries()
+    sql_shaped = sorted(
+        name for name, q in queries.items()
+        if re.search(r"\b(spark\.sql|fixture_sql)\(", inspect.getsource(inspect.unwrap(q)))
+    )
+    assert len(sql_shaped) >= 25, sql_shaped
+    session = spark.newSession()
+    before = sorted(t.name for t in session.catalog.listTables())
+    for name in sql_shaped:
+        queries[name](session, sf_small).collect()
+        after = sorted(t.name for t in session.catalog.listTables())
+        assert after == before, f"{name} left {sorted(set(after) - set(before))}"
+
+
+def test_workers_import_the_package_without_pythonpath(tmp_path):
+    """A program that finds the package through ``sys.path`` alone (as
+    ``__spark_entry__`` does), on a plain session started from another
+    directory with no ``PYTHONPATH``, still runs a query whose Python
+    workers import package functions by name."""
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+import __spark_entry__
+print("rows", __spark_entry__.queries()["streaming_pattern_state"](spark, {SF_SMALL!r}).count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0 and "rows " in run.stdout, run.stderr[-3000:]
