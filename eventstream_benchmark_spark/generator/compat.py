@@ -19,8 +19,9 @@ SURVEY §4.2).
 
 The reference's pickle result cache (``eventstream.py:249-284``)
 becomes a materialization keyed by the same md5-of-config scheme: an
-npz on the driver in exact mode (works with or without Spark), a
-parquet directory for DataFrame surfaces when a session is attached.
+npz on the driver in exact mode (works with or without Spark; the
+exact DataFrame is built from its arrays), a parquet directory in
+sharded mode.
 """
 
 from __future__ import annotations
@@ -183,23 +184,24 @@ class EventStream:
 
     @property
     def df(self):
-        """The stream as a DataFrame (lazy; built once per instance),
-        optionally materialized through the parquet config cache."""
+        """The stream as a DataFrame (lazy; built once per instance).
+        Exact mode builds it from the driver arrays (npz-cached);
+        sharded mode materializes it through the parquet config cache."""
         if self._df is not None:
             return self._df
         if self._spark is None:
             raise ValueError("no SparkSession attached (pass spark=...)")
-        if self._mode == "sharded":
-            df = spark_gen.stream_df_sharded(
-                self._spark, None, self.cfg, self._n_shards,
-                pattern_arrays=(self.patterns.types, self.patterns.gaps),
-            )
-        else:
+        if self._mode == "exact":
             ts, ty, label = self._exact_arrays()
-            df = self._spark.createDataFrame(
+            self._df = self._spark.createDataFrame(
                 spark_gen._arrays_to_pdf(ts, ty, label, shard=0, id_offset=0),
                 spark_gen.STREAM_SCHEMA,
             )
+            return self._df
+        df = spark_gen.stream_df_sharded(
+            self._spark, None, self.cfg, self._n_shards,
+            pattern_arrays=(self.patterns.types, self.patterns.gaps),
+        )
         if self._cache_dir is not None:
             path = os.path.join(self._cache_dir, f"stream_{self._cache_key()}")
             mode = "overwrite" if self._regenerate else "ignore"

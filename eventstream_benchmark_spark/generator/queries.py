@@ -245,17 +245,13 @@ def udtf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in (1, 10, 100):
                 yield s, cnt // s
 
-    spark.udtf.register("scale_buckets", ScaleBuckets)
     counts = load_table(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count("*").alias("cnt")
     )
-    return spark.sql(
-        """
-        SELECT event_type, s.scale, s.scaled
-        FROM {counts}, LATERAL scale_buckets(cnt) s
-        ORDER BY event_type, scale
-        """,
-        counts=counts,
+    return (
+        counts.lateralJoin(ScaleBuckets(F.col("cnt").outer()))
+        .select("event_type", "scale", "scaled")
+        .orderBy("event_type", "scale")
     )
 
 

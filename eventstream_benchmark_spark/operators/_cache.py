@@ -7,127 +7,124 @@ lazy DataFrames, so the query itself can never unpersist — and across
 a sweep inside one session, never-released persists accumulate
 executor storage.
 
-Contract: persist through :func:`scoped_persist`; query bodies never
-release. ``operators.all_queries`` wraps every query in
-:func:`released_at_entry`, which calls :func:`release_scoped_persists`
-before the query runs, so during a sweep at most one query's
-intermediates occupy storage at a time; a harness (perfbench, tests)
-releases once more at its end so nothing outlives the sweep.
-``unpersist`` never invalidates a DataFrame — later actions just
-recompute — so releasing a previous query's cache is always safe.
+Scoped persists: persist through :func:`scoped_persist`; query bodies
+never release. Each frame belongs to the thread that persisted it
+(``_LIVE`` is keyed by ``threading.get_ident()``). ``operators.
+all_queries`` wraps every query in :func:`released_at_entry`, which
+releases the CALLING thread's list before the query runs, so during a
+sweep at most one query's intermediates per thread occupy storage, and
+a query entered on another thread leaves this thread's barriers
+alone. A harness (perfbench, tests) calls
+:func:`release_scoped_persists` at its end, which releases every
+thread's list. ``unpersist`` never invalidates a DataFrame — later
+actions just recompute — so releasing is always safe. Spark keys its
+cache by plan, so two threads that persist an identical plan share one
+cache entry, and either thread's release drops it for both.
+
+Shared persists: :func:`shared_persist` keeps ONE ``_SHARED`` entry
+per (family, application id, fixture path) holding whatever the
+family's builder returned — one frame, or a tuple of frames built from
+one plan (the MinHash collapse twins, the BPE merge table with its
+vocabulary history). The builder runs at most once per key, under
+``_LOCK``: a re-entrant lock, because some builders consume another
+family (``cc_labels`` builds through ``minhash_rep_pairs``). Entries
+outlive queries; harness boundaries release them by family or all at
+once. A tuple entry is stored and released as a whole, so no release
+can leave half of a build behind.
 """
 
 from __future__ import annotations
 
 import functools
 import os
+import threading
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from eventstream_benchmark_spark.session import share_package_path
 
-_LIVE: list[DataFrame] = []
+_LIVE: dict[int, list[DataFrame]] = {}
 
-# shared_key(...) -> persisted DataFrame shared ACROSS queries
-# of one family within a sweep (the graph family's co-purchase edge
-# build is the motivating case: four queries each paid the same
-# distinct + per-order self-join).  Deliberately NOT released by
-# release_scoped_persists — harness boundaries (bench lane ends, test
-# session teardown) call release_shared_persists instead.
-_SHARED: dict[tuple, DataFrame] = {}
+_LOCK = threading.RLock()
+_SHARED: dict[tuple, DataFrame | tuple[DataFrame, ...]] = {}
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for release at the next query."""
+    """Persist ``df`` and register it for release when the calling
+    thread enters its next query."""
     df.persist()
-    _LIVE.append(df)
+    _LIVE.setdefault(threading.get_ident(), []).append(df)
     return df
 
 
+def _unpersist(frames) -> None:
+    for df in frames:
+        df.unpersist()
+
+
 def release_scoped_persists() -> None:
-    """Unpersist every registered intermediate (idempotent)."""
-    while _LIVE:
-        _LIVE.pop().unpersist()
+    """Unpersist every thread's registered intermediates (idempotent)."""
+    for ident in list(_LIVE):
+        _unpersist(_LIVE.pop(ident, ()))
 
 
 def released_at_entry(
     query: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """Wrap a registry query so it releases the previous query's scoped
-    persists before it runs, and so its Python workers can import this
-    package (``session.share_package_path``)."""
+    """Wrap a registry query so it releases the calling thread's
+    previous scoped persists before it runs, and so its Python workers
+    can import this package (``session.share_package_path``)."""
 
     @functools.wraps(query)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_scoped_persists()
+        _unpersist(_LIVE.pop(threading.get_ident(), ()))
         share_package_path(spark)
         return query(spark, sf_dir)
 
     return run
 
 
-def shared_key(spark: SparkSession, sf_dir: str, *tags) -> tuple:
-    """The shared-registry key ``(*tags, applicationId, abspath(sf_dir))``.
-    The first tag names the family (``release_shared_families`` matches
-    it); the application id keeps a cached frame from serving a later
-    session, and the fixture path keeps two fixtures from sharing a
-    build."""
-    return (*tags, spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+def _frames(entry: DataFrame | tuple[DataFrame, ...]) -> tuple[DataFrame, ...]:
+    return entry if isinstance(entry, tuple) else (entry,)
 
 
-def shared_persist(
-    spark: SparkSession, sf_dir: str, family: str, builder: Callable[[], DataFrame]
-) -> DataFrame:
-    """Return the persisted DataFrame ``family`` shares for this
-    session and fixture (:func:`shared_key`), building it on first use.
+def shared_persist(spark: SparkSession, sf_dir: str, family: str, builder: Callable):
+    """Return what ``family``'s ``builder`` built for this session and
+    fixture — one frame or a tuple of frames, persisted — calling the
+    builder on first use only. The key carries the application id, so a
+    frame never serves a later session, and the fixture path, so two
+    fixtures never share a build.
 
-    If an external actor unpersisted the entry (e.g. a harness calling
+    If an external actor unpersisted a frame (e.g. a harness calling
     ``spark.catalog.clearCache()``), re-persist it — the frame stays
     valid either way (Spark recomputes lazily); re-persisting just
     restores the amortization."""
-    key = shared_key(spark, sf_dir, family)
-    return shared_persist_atomic((key,), lambda: (builder(),))[0]
-
-
-def shared_persist_atomic(
-    keys: tuple[tuple, ...], builder: Callable[[], tuple[DataFrame, ...]]
-) -> tuple[DataFrame, ...]:
-    """All-or-nothing :func:`shared_persist` for artifacts that come
-    out of ONE shared build plan (``builder`` returns one frame per
-    key, in order). If ANY key is missing, every key in the group is
-    dropped and the whole group rebuilt — a selective eviction (e.g.
-    ``release_shared_families`` naming only one of the family tags)
-    can therefore never leave one twin riding a stale upstream persist
-    while a rebuild of the other materializes a duplicate of that same
-    upstream (``dedup._collapse_family``'s twin frames share a
-    persisted ``groups`` aggregate, and a half-evicted group would keep
-    two copies of it in storage)."""
-    if not all(k in _SHARED for k in keys):
-        for k in keys:
-            df = _SHARED.pop(k, None)
-            if df is not None:
-                df.unpersist()
-        for k, df in zip(keys, builder(), strict=True):
-            _SHARED[k] = df
-    out = tuple(_SHARED[k] for k in keys)
-    for df in out:
-        if not df.is_cached:
-            df.persist()
-    return out
+    key = (family, spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    with _LOCK:
+        entry = _SHARED.get(key)
+        if entry is None:
+            entry = _SHARED[key] = builder()
+        for df in _frames(entry):
+            if df.storageLevel == StorageLevel.NONE:
+                df.persist()
+    return entry
 
 
 def release_shared_persists() -> None:
     """Unpersist every family-shared frame (harness boundaries only)."""
-    while _SHARED:
-        _SHARED.popitem()[1].unpersist()
+    with _LOCK:
+        while _SHARED:
+            _unpersist(_frames(_SHARED.popitem()[1]))
 
 
 def release_shared_families(prefixes: tuple[str, ...]) -> None:
-    """Unpersist and drop only the shared frames whose family tag (the
+    """Unpersist and drop only the shared entries whose family (the
     key's first element) is in ``prefixes`` — the bench uses this so a
     query that EMITS a shared artifact pays its own build on every
     measured pass without evicting other families' builds (e.g. the
     graph lane's edge aggregate mid-handoff)."""
-    for key in [k for k in _SHARED if k[0] in prefixes]:
-        _SHARED.pop(key).unpersist()
+    with _LOCK:
+        for key in [k for k in _SHARED if k[0] in prefixes]:
+            _unpersist(_frames(_SHARED.pop(key)))

@@ -38,9 +38,7 @@ from pyspark.sql import functions as F
 from eventstream_benchmark_spark.io import load_table
 from eventstream_benchmark_spark.operators._cache import (
     scoped_persist,
-    shared_key,
     shared_persist,
-    shared_persist_atomic,
 )
 from eventstream_benchmark_spark.operators._util import bigint, null_safe_div, r6
 
@@ -555,12 +553,9 @@ def _collapse_family(
     node). Neither frame carries a member ARRAY (round-8 verdict #3):
     weight is a count, membership is relational rows.
 
-    The two keys are cached ATOMICALLY (round-11, r10 advice): both
-    frames ride one persisted ``groups`` aggregate, so a selective
-    eviction of one key must drop and rebuild both together — the
-    previous per-key builders silently rebuilt BOTH frames on a
-    half-evicted cache and left the surviving twin on the old
-    ``groups`` persist, doubling its storage."""
+    Both frames ride one persisted ``groups`` aggregate, so they are
+    ONE shared entry (family ``minhash_rep_pairs``), built and released
+    together."""
     def _build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         keyed = docs.select(F.lower("text").alias("ltext"), "doc_id")
@@ -587,13 +582,7 @@ def _collapse_family(
         )
         return rep_pairs, membership
 
-    return shared_persist_atomic(
-        (
-            shared_key(spark, sf_dir, "minhash_rep_pairs"),
-            shared_key(spark, sf_dir, "minhash_membership"),
-        ),
-        _build,
-    )
+    return shared_persist(spark, sf_dir, "minhash_rep_pairs", _build)
 
 
 def _band_sig_explode() -> "F.Column":

@@ -38,8 +38,8 @@ LSH_PLANES = 12
 EMB_DIM = 64  # the fixture's embedding width
 
 
-def _as_double(col: str = "embedding"):
-    return F.transform(col, lambda x: x.cast("double"))
+def _as_double():
+    return F.transform("embedding", lambda x: x.cast("double"))
 
 
 def _dot(va, vb):
@@ -557,7 +557,7 @@ def embed_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign-disagreement count (== bit_count(xor) by definition), the
     same r6 cosine, and both rankings."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
+        "vec_id", _as_double().alias("v")
     )
 
     def word(lo: int):
@@ -656,7 +656,7 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(
             "vec_id",
             "label",
-            _as_double("embedding").alias("v"),
+            _as_double().alias("v"),
         ).withColumn("amax", F.array_max(F.transform("v", F.abs)))
     )
     scale = F.col("amax") / 127.0
@@ -1115,15 +1115,15 @@ def _fold_cos(a: str, b: str) -> str:
     return f"({_fold_dot(a, b)} / (sqrt({_fold_dot(a, a)}) * sqrt({_fold_dot(b, b)})))"
 
 
-def _lsh_bucket_sql(v: str = "v", n_bits: int = LSH_PLANES) -> str:
-    """The n-bit sign-bucket expression over literal hyperplanes —
-    the same literals Spark embeds via ``_hyperplane`` (12 bits for
-    the pair-mining table, QUERY_LSH_BITS for the multiprobe query
-    path)."""
+def _lsh_bucket_sql(n_bits: int = LSH_PLANES) -> str:
+    """The n-bit sign-bucket expression of column ``v`` over literal
+    hyperplanes — the same literals Spark embeds via ``_hyperplane``
+    (12 bits for the pair-mining table, QUERY_LSH_BITS for the
+    multiprobe query path)."""
     terms = []
     for p in range(n_bits):
         h = "CAST([" + ", ".join(repr(c) for c in _hyperplane(p)) + "] AS DOUBLE[])"
-        terms.append(f"(CASE WHEN {_fold_dot(v, h)} > 0 THEN {1 << p} ELSE 0 END)")
+        terms.append(f"(CASE WHEN {_fold_dot('v', h)} > 0 THEN {1 << p} ELSE 0 END)")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 _MRL_UNION = " UNION ALL ".join(
@@ -1283,7 +1283,7 @@ ORACLES = {
             SELECT vec_id, v, bucket,
                    greatest(count(*) OVER (PARTITION BY bucket)
                             - {LSH_BUCKET_CAP}, 0) AS n_overflow
-            FROM (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e)
+            FROM (SELECT vec_id, v, {_lsh_bucket_sql()} AS bucket FROM e)
             QUALIFY row_number() OVER (PARTITION BY bucket
                                        ORDER BY vec_id) <= {LSH_BUCKET_CAP}
         )
@@ -1302,7 +1302,7 @@ ORACLES = {
         ),
         bk AS (
             SELECT vec_id, v,
-                   {_lsh_bucket_sql('v', QUERY_LSH_BITS)} AS bucket
+                   {_lsh_bucket_sql(QUERY_LSH_BITS)} AS bucket
             FROM e
         ),
         q AS (

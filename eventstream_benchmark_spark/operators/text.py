@@ -1756,21 +1756,14 @@ def _bpe_family(
     merge table and vocabularies ARE the stored artifacts of the train
     step (the docstrings already said so); the family persist is the
     in-session stand-in. History is padded to BPE_MERGE_STEPS+1 with
-    the final state (the curve's exhaustion flat-tail rule) so the
-    shared key set is fixed; ``history[-1]`` is therefore always the
-    final vocabulary. The bench's emitter protocol releases the
-    ``bpe_*`` tags before every timed ``corpus_bpe_merge_loop`` pass,
-    so the emitter still reports the true build cost and the
-    consumers report marginal cost — the minhash_pairs asymmetry."""
-    from eventstream_benchmark_spark.operators._cache import (
-        shared_key,
-        shared_persist_atomic,
-    )
-
-    keys = (
-        shared_key(spark, sf_dir, "bpe_merges"),
-        *(shared_key(spark, sf_dir, "bpe_hist", k) for k in range(BPE_MERGE_STEPS + 1)),
-    )
+    the final state (the curve's exhaustion flat-tail rule);
+    ``history[-1]`` is therefore always the final vocabulary. The merge
+    table and the history are one shared entry (family ``bpe_merges``);
+    the bench's emitter protocol releases it before every timed
+    ``corpus_bpe_merge_loop`` pass, so the emitter still reports the
+    true build cost and the consumers report marginal cost — the
+    minhash_pairs asymmetry."""
+    from eventstream_benchmark_spark.operators._cache import shared_persist
 
     def build() -> tuple[DataFrame, ...]:
         docs = load_table(spark, sf_dir, "documents")
@@ -1800,7 +1793,7 @@ def _bpe_family(
             raise
         return (mdf, *history)
 
-    out = shared_persist_atomic(keys, build)
+    out = shared_persist(spark, sf_dir, "bpe_merges", build)
     return out[0], list(out[1:])
 
 

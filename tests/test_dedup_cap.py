@@ -573,40 +573,3 @@ def test_semantic_decon_equals_split_filtered_full_pass(spark, tmp_path):
         math.isclose(a, b, rel_tol=0, abs_tol=0)
         for a, b in zip(got.max_cosine, expected.max_cosine)
     )
-
-
-def test_shared_persist_atomic_rebuilds_group_together(spark):
-    """`shared_persist_atomic` (r11, r10 advice): evicting ONE key of
-    an atomic group must rebuild BOTH keys through one builder call —
-    never leave the surviving twin on the old build while the evicted
-    key rebuilds a duplicate of the shared upstream."""
-    from eventstream_benchmark_spark.operators._cache import (
-        _SHARED,
-        release_shared_families,
-        release_shared_persists,
-        shared_persist_atomic,
-    )
-
-    release_shared_persists()
-    calls = []
-
-    def build():
-        calls.append(1)
-        a = spark.range(3).withColumnRenamed("id", "a")
-        b = spark.range(4).withColumnRenamed("id", "b")
-        return a, b
-
-    keys = (("atomic_test_a", "k"), ("atomic_test_b", "k"))
-    a1, b1 = shared_persist_atomic(keys, build)
-    assert len(calls) == 1
-    # fully cached: no rebuild
-    a2, b2 = shared_persist_atomic(keys, build)
-    assert len(calls) == 1 and a2 is a1 and b2 is b1
-    # selective eviction of ONE key -> whole group rebuilds, both
-    # frames are fresh objects, and nothing is stranded in _SHARED
-    release_shared_families(("atomic_test_a",))
-    a3, b3 = shared_persist_atomic(keys, build)
-    assert len(calls) == 2
-    assert a3 is not a1 and b3 is not b1
-    assert _SHARED[keys[0]] is a3 and _SHARED[keys[1]] is b3
-    release_shared_persists()

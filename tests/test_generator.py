@@ -631,6 +631,26 @@ def test_compat_cache_key_covers_pattern_contents(spark, tmp_path, mode):
     assert not np.array_equal(cached[0], cached[1])
 
 
+@pytest.mark.parametrize("mode", ["exact", "sharded"])
+def test_compat_df_cache_materializes_once(spark, tmp_path, mode):
+    """With a ``cache_dir``, ``.df`` leaves one materialization of the
+    stream: the npz in exact mode (the frame is built from its arrays),
+    the parquet directory in sharded mode; its rows equal
+    ``to_numpy()``."""
+    from eventstream_benchmark_spark.generator import compat
+
+    pats = compat.generate_patterns(n_patterns=4, pattern_length=5, n_types=4, seed=11)
+    es = compat.EventStream(
+        pats, n_types=4, total_events=2_000, random_ratio=0.5, seed=7,
+        spark=spark, mode=mode, n_shards=8, cache_dir=str(tmp_path),
+    )
+    pdf = es.df.orderBy("shard", "event_id").select("ts", "event_type", "is_pattern").toPandas()
+    np.testing.assert_array_equal(pdf.to_numpy().astype(np.int64), es.to_numpy())
+    (entry,) = tmp_path.iterdir()
+    assert entry.name.startswith("stream_")
+    assert entry.is_file() == (mode == "exact") and (entry.suffix == ".npz") == (mode == "exact")
+
+
 def test_compat_exact_to_csv_single_file_even_with_spark(spark, tmp_path):
     """Round-4 advice: with a session attached, exact-mode to_csv must
     still produce the reference's single CSV FILE at ``path`` — not a

@@ -5,6 +5,7 @@ byte-plumbing equivalence against plain NumPy."""
 from __future__ import annotations
 
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -100,7 +101,8 @@ def test_scoped_persists_bounded_and_released(spark, sf_small):
     """The _cache.py contract, end to end: during a sweep at most one
     query's intermediates occupy executor storage (the registry wrapper
     releases the previous query's at entry), and the harness-side
-    release leaves nothing behind."""
+    release leaves nothing behind. The frames are the calling thread's
+    own list."""
     from eventstream_benchmark_spark.operators import _cache, all_queries
 
     qs = all_queries()
@@ -118,14 +120,14 @@ def test_scoped_persists_bounded_and_released(spark, sf_small):
         assert not any(p.is_cached for p in previous), (
             f"{name} ran with its predecessor's persists still cached"
         )
-        previous = list(_cache._LIVE)
+        previous = list(_cache._LIVE.get(threading.get_ident(), ()))
         # minhash persists the exact-dup group table + the relational
         # (rep_id, doc_id) membership table (round-9: replaced the
         # per-group member array) + representative shingles + capped
         # shingles + signatures; everything else at most FOUR (the
         # bound stays per-family so a lean query can't silently grow)
         bound = 5 if name == "dedup_minhash_lsh" else 4
-        assert len(_cache._LIVE) <= bound, name
+        assert len(previous) <= bound, name
     _cache.release_scoped_persists()
     assert not _cache._LIVE
 
