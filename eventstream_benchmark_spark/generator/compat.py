@@ -193,20 +193,20 @@ class EventStream:
             raise ValueError("no SparkSession attached (pass spark=...)")
         if self._mode == "exact":
             ts, ty, label = self._exact_arrays()
-            self._df = self._spark.createDataFrame(
+            df = self._spark.createDataFrame(
                 spark_gen._arrays_to_pdf(ts, ty, label, shard=0, id_offset=0),
                 spark_gen.STREAM_SCHEMA,
             )
-            return self._df
-        df = spark_gen.stream_df_sharded(
-            self._spark, None, self.cfg, self._n_shards,
-            pattern_arrays=(self.patterns.types, self.patterns.gaps),
-        )
-        if self._cache_dir is not None:
-            path = os.path.join(self._cache_dir, f"stream_{self._cache_key()}")
-            mode = "overwrite" if self._regenerate else "ignore"
-            df.write.mode(mode).parquet(path)
-            df = self._spark.read.parquet(path)
+        else:
+            df = spark_gen.stream_df_sharded(
+                self._spark, None, self.cfg, self._n_shards,
+                pattern_arrays=(self.patterns.types, self.patterns.gaps),
+            )
+            if self._cache_dir is not None:
+                path = os.path.join(self._cache_dir, f"stream_{self._cache_key()}")
+                mode = "overwrite" if self._regenerate else "ignore"
+                df.write.mode(mode).parquet(path)
+                df = self._spark.read.parquet(path)
         self._df = df
         return self._df
 
